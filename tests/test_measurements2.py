@@ -1215,13 +1215,6 @@ class TestFreezeBranchContracts:
         assert m.release_rows(self._gdf(spark)) == 4
         assert m(self._gdf(spark)).count() == 4
 
-    def test_opt_out_takes_probe_branch(self, spark):
-        # rows_per_group=None: observed-size freeze branch, any
-        # (noise-independent) cardinality is accepted
-        m = self._apply_in_pandas(3, rows_per_group=None)
-        assert m.release_rows(self._gdf(spark)) is None
-        assert m(self._gdf(spark)).count() == 6
-
     def test_partition_selection_small_is_one_driver_release(
         self, spark, monkeypatch
     ):
@@ -1351,6 +1344,116 @@ class TestFreezeBranchContracts:
     def test_apply_in_pandas_rejects_nonpositive_rows_per_group(self, spark):
         with pytest.raises(ValueError, match="rows_per_group"):
             self._apply_in_pandas(1, rows_per_group=0)
+
+    @staticmethod
+    def _jobs_in(spark, fn):
+        """Run ``fn`` under a fresh job group; return (result, #jobs)."""
+        import uuid
+
+        sc = spark.sparkContext
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def test_sanitize_df_requires_a_bound(self, spark):
+        from tumult_core_spark.utils.misc import sanitize_df
+
+        with pytest.raises(TypeError):
+            sanitize_df(spark.range(3))
+
+    def test_groupby_counts_deduplicated_keys_once(self, spark):
+        from tumult_core_spark.transformations.groupby import GroupBy
+
+        keys = spark.createDataFrame(
+            [("a",), ("b",), ("a",), ("c",), ("b",)], "g string"
+        )
+        gb = GroupBy(v_domain(), SymmetricDifference(), False, keys)
+        n, jobs = self._jobs_in(spark, lambda: gb.n_keys)
+        assert n == 3 and jobs >= 1
+        # memoised: later reads (and the bound GroupedDataFrame) reuse it
+        n, jobs = self._jobs_in(spark, lambda: gb(gb.group_keys).n_keys)
+        assert n == 3 and jobs == 0
+
+    def test_ungrouped_quantile_does_not_count_its_keys(self, spark):
+        """The ungrouped quantile runs through a one-key GroupBy that
+        declares ``n_keys=1``, so no release counts its key relation.
+        Before the bound was declared, every release counted the
+        deduplicated one-row key relation (two jobs under AQE: the
+        dedup shuffle and the count) and then ran the observed-size
+        freeze probe — 7 jobs per release against 5 now."""
+        df = spark.createDataFrame(
+            [(float(i % 10),) for i in range(100)], "x double"
+        )
+        dom = SparkDataFrameDomain.from_spark_schema(df.schema)
+        m = create_quantile_measurement(
+            dom, SymmetricDifference(), PureDP(), 1, 1, "x", 0.5, 0.0, 10.0
+        )
+        for _ in range(2):
+            value, jobs = self._jobs_in(spark, lambda: m(df))
+            assert 0.0 <= value <= 10.0
+            assert jobs <= 5, jobs
+
+    def test_internal_persists_are_released(self, spark, monkeypatch):
+        """Partition selection's large path and SVT's distributed path
+        persist a relation for the call only: repeated releases leave
+        no persistent RDD behind, and a cache the caller made on the
+        same plan beforehand survives the call."""
+        from pyspark import StorageLevel
+
+        from tumult_core_spark.measurements.spark import (
+            GeometricPartitionSelection,
+            SparseVectorPrefixSums,
+        )
+        from tumult_core_spark.utils import misc as misc_mod
+
+        jsc = spark.sparkContext._jsc
+
+        def persistent_rdds():
+            return set(jsc.getPersistentRDDs().keys())
+
+        before = persistent_rdds()
+        # 2 candidates > 1: partition selection takes its large path
+        monkeypatch.setattr(misc_mod, "SMALL_RELEASE_ROWS", 1)
+        sel = GeometricPartitionSelection(
+            SparkDataFrameDomain({"g": STR}), threshold=2, alpha=0
+        )
+        sel_in = spark.createDataFrame([("a1",)] * 3 + [("a2",)], "g string")
+        # no known_input_rows: SVT's distributed path
+        svt = SparseVectorPrefixSums(
+            SparkDataFrameDomain({"g": STR, "rank": INT, "cnt": INT}),
+            "cnt", "rank", alpha=0, grouping_columns=["g"],
+        )
+        svt_in = spark.createDataFrame(
+            [(g, r, 10) for g in ("a", "b") for r in range(5)],
+            "g string, rank long, cnt long",
+        )
+        for _ in range(2):
+            assert [tuple(r) for r in sel(sel_in).collect()] == [("a1", 3)]
+            assert svt(svt_in).count() == 2
+        assert persistent_rdds() - before == set()
+
+        # the caller caches the same plans the measurements persist: the
+        # candidate aggregate (a separate DataFrame object — the cache
+        # is found by plan) and the SVT input itself
+        caller_counts = (
+            sel_in.groupBy("g").agg(F.count(F.lit(1)).alias("count")).persist()
+        )
+        svt_in.persist()
+        try:
+            caller_counts.count()
+            svt_in.count()
+            assert [tuple(r) for r in sel(sel_in).collect()] == [("a1", 3)]
+            assert svt(svt_in).count() == 2
+            assert caller_counts.storageLevel != StorageLevel.NONE
+            assert svt_in.storageLevel != StorageLevel.NONE
+        finally:
+            caller_counts.unpersist()
+            svt_in.unpersist()
 
 
 class TestR16SoundnessPins:

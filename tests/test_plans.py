@@ -138,15 +138,15 @@ def test_sanitize_rebalances_to_data_size(spark):
     is still a full exchange keyed on the random column, but AQE sizes
     the partition count to the released data — a small aggregate release
     materializes as one file, not `shuffle.partitions` near-empty ones."""
-    from tumult_core_spark.utils.misc import sanitize_df
+    from tumult_core_spark.utils.misc import _shuffle_for_release, sanitize_df
 
     df = spark.range(3000).select(
         (F.col("id") % 7).alias("g"), F.col("id").alias("v")
     )
-    pre = sanitize_df(df, materialize_output=False)
+    pre = _shuffle_for_release(df)
     plan = plan_of(pre)
     assert "REBALANCE_PARTITIONS_BY_COL" in plan
-    out = sanitize_df(df)
+    out = sanitize_df(df, known_rows=3000)
     # multiset preserved, tiny release frozen as a JVM local relation
     assert out.count() == 3000
     assert out.agg(F.sum("v")).collect()[0][0] == sum(range(3000))
@@ -171,7 +171,7 @@ def test_release_freeze_is_local_relation_not_python_rdd(spark):
         F.when(F.col("id") % 2 == 0, F.col("id")).alias("n"),
         F.when(F.col("id") % 3 == 0, F.lit(float("nan"))).alias("x"),
     )
-    rel = sanitize_df(noisy)
+    rel = sanitize_df(noisy, known_rows=6)
     plan = plan_of(rel)
     assert "LocalTableScan" in plan, plan
     assert "Scan ExistingRDD" not in plan, plan
@@ -305,7 +305,7 @@ def test_sanitize_survives_reserved_column_name(spark):
     df = spark.range(10).select(
         F.col("id").alias("__shuffle_key"), (F.col("id") * 2).alias("v")
     )
-    out = sanitize_df(df)
+    out = sanitize_df(df, known_rows=10)
     assert out.columns == ["__shuffle_key", "v"]
     assert sorted(r["__shuffle_key"] for r in out.collect()) == list(range(10))
     assert out.agg(F.sum("v")).collect()[0][0] == 2 * sum(range(10))
@@ -411,16 +411,32 @@ def test_fused_moments_single_scan_single_exchange(spark, sf_dir, monkeypatch):
     assert "BatchEvalPython" not in plan, plan
 
 
+def test_python_widen_of_map_column_falls_back_to_round_robin(spark):
+    """``xxhash64`` cannot hash a MAP column: the narrow-input widen
+    before a Python stage must fall back to a round-robin exchange to
+    the session parallelism instead of failing."""
+    from tumult_core_spark.transformations.map import _widen_for_python
+
+    target = spark.sparkContext.defaultParallelism
+    narrow = spark.createDataFrame(
+        [({"a": i},) for i in range(8)], "m map<string,int>"
+    ).coalesce(1)
+    out = _widen_for_python(narrow)
+    assert "RoundRobinPartitioning" in plan_of(out)
+    assert out.rdd.getNumPartitions() == target
+    assert out.count() == 8
+
+
 def test_sanitize_large_output_keeps_parallelism(spark):
     """The REBALANCE sanitize must still fan a large release out to
     many partitions (the small-release coalescing must not collapse
     big outputs onto one task)."""
-    from tumult_core_spark.utils.misc import sanitize_df
+    from tumult_core_spark.utils.misc import _shuffle_for_release
 
     big = spark.range(30_000_000).select(
         F.col("id").alias("a"), (F.col("id") * 2).alias("b"), F.rand().alias("x")
     )
-    pre = sanitize_df(big, materialize_output=False)
+    pre = _shuffle_for_release(big)
     assert pre.rdd.getNumPartitions() > 1
 
 
@@ -861,7 +877,7 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
     (a) scale-0 outputs identical to the executor pandas-UDF path,
     same schema; (b) the frozen plan is a LocalTableScan; (c) a
     release exceeding the declared bound still raises; (d) ineligible
-    inputs (no bound / bound over SMALL_RELEASE_ROWS) fall back to the
+    inputs (bound over SMALL_RELEASE_ROWS) fall back to the
     executor path BEFORE any draw."""
     import tumult_core_spark.utils.misc as misc
     from tumult_core_spark.measures import PureDP
@@ -933,7 +949,6 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
         )
         is None
     )
-    assert misc.freeze_noised_release(counted, [("count", None, "long")], None) is None
 
 
 def test_svt_driver_release_matches_distributed_path(spark):

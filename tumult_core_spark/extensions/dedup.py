@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..utils.scale import broadcast_below
+
 #: Schema-metadata key stamped on ``band_key`` by
 #: :func:`minhash_band_index` when built with ``max_band_bucket`` —
 #: the proof :func:`minhash_lsh_cross_pairs` demands before trusting
@@ -204,13 +206,16 @@ def cap_hot_buckets(
     systematically evict the highest ids (e.g. every renumbered
     duplicate) from hot buckets.
 
-    The over-cap bucket key set is broadcast when small: under AQE
-    (the default) the engine decides from the hot side's actual
-    materialized size at runtime — no extra action; without AQE an
-    explicit counted gate broadcasts when the estimate fits
-    ``broadcast_threshold_bytes``.  Either way a pathological corpus
+    The over-cap bucket key set is broadcast when it fits a size gate:
+    it has at most ``count(df)/cap`` entries and in practice only
+    degenerate boilerplate buckets exceed the cap — but that bound
+    still grows linearly with the corpus, so a pathological corpus
     (everything boilerplate) falls back to a plain shuffle join on the
-    bucket key instead of an unbounded broadcast.
+    bucket key instead of an unbounded broadcast.  Counting the hot
+    set is a scalar aggregate over the persisted input, so the extra
+    action reuses the cache the function needs anyway.  The explicit
+    hint holds in every configuration (AQE on or off, automatic
+    broadcasts disabled).
     """
     capped, _ = _cap_hot_buckets_with_rescue(
         df, bucket_cols, id_col, cap, salt, broadcast_threshold_bytes
@@ -279,28 +284,12 @@ def _cap_hot_buckets_with_rescue(
         )
         .withColumn("__hot", F.lit(True))
     )
-    # Broadcast decision (r19): under AQE the join strategy is decided
-    # from the hot side's ACTUAL materialized size at runtime
-    # (adaptive autoBroadcastJoinThreshold), which is both tighter
-    # than the 100 MB row-count estimate gate below and FREE — the
-    # eager hot.count() action cost one full scheduler round trip per
-    # cap call before the main job could even start.  The pathological
-    # fallback property is preserved: an over-threshold hot set plans
-    # a shuffle join, never an unbounded broadcast.  Without AQE the
-    # planner would see only a size estimate for the aggregated hot
-    # relation (and pick a shuffle join for a ten-row hot set), so the
-    # counted gate is kept for that configuration — config-adaptive,
-    # same convention as truncate_large_groups' salted-pass gate.
-    aqe_on = (
-        str(
-            df.sparkSession.conf.get("spark.sql.adaptive.enabled", "true")
-        ).lower()
-        == "true"
+    hot = broadcast_below(
+        hot,
+        hot.count(),
+        est_row_bytes=_EST_BUCKET_KEY_BYTES,
+        threshold_bytes=broadcast_threshold_bytes,
     )
-    if not aqe_on and (
-        hot.count() * _EST_BUCKET_KEY_BYTES <= broadcast_threshold_bytes
-    ):
-        hot = F.broadcast(hot)
     cond = F.lit(True)
     for i, c in enumerate(bucket_cols):
         cond = cond & F.col(c).eqNullSafe(F.col(f"__hk_{i}"))

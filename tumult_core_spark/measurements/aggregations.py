@@ -175,8 +175,7 @@ def _create_count_like(
             chained.stability_function(d_in_e), eps_like, core
         )
         mech = AddNoiseToSeries(_make_mechanism(mechanism, scale, NumpyIntegerDomain()))
-        # grouped release: at most one row per public key, so the
-        # sanitize freeze branch needs no observed probe
+        # grouped release: at most one row per public key
         noise = AddNoiseToColumn(
             count_t.output_domain, mech, count_column,
             known_release_rows=gb.n_keys,
@@ -690,9 +689,9 @@ def create_bounds_measurement(
             raise ValueError("groupby_transformation does not match input")
         keys = gb.group_keys.crossJoin(rank_keys)
         group_cols = gb.groupby_columns
-        # public constant: (#keys) x (#ranks) when the key count is
-        # declared — feeds the SVT driver-release gate below
-        n_grid = None if gb.n_keys is None else gb.n_keys * n_ranks
+        # public constant (#keys) x (#ranks): feeds the SVT
+        # driver-release gate below
+        n_grid = gb.n_keys * n_ranks
 
     full_gb = GroupBy(derive.output_domain, input_metric, False, keys, n_keys=n_grid)
     count_t = CountGrouped(full_gb.output_domain, full_gb.output_metric, "__count")
@@ -930,7 +929,7 @@ class FusedMomentsMeasurement(Measurement):
                     else "long"
                 )
                 specs.append((s, series_mech, out_type))
-            known_rows = getattr(gdf, "n_keys", None)
+            known_rows = gdf.n_keys
             # public-key-bounded release: draw all three statistics'
             # noise driver-side over the frozen pre-noise aggregate —
             # one job, no ArrowEvalPython stages, no REBALANCE (see

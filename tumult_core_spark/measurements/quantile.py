@@ -325,7 +325,7 @@ class _PreAggregatedQuantile(Measurement):
         )
         regrouped = GroupedDataFrame(counts, gdf.group_keys, n_keys=gdf.n_keys)
         out = regrouped.apply_in_pandas(self.agg, self.agg.output_spark_schema)
-        return sanitize_df(out, known_rows=getattr(gdf, "n_keys", None))
+        return sanitize_df(out, known_rows=gdf.n_keys)
 
 
 def create_quantile_measurement(
@@ -388,7 +388,7 @@ def create_quantile_measurement(
         )
         spark = SparkSession.active()
         keys = spark.range(1).select(F.lit(0).cast("long").alias("__g"))
-        gb = GroupBy(pre_t.output_domain, input_metric, False, keys)
+        gb = GroupBy(pre_t.output_domain, input_metric, False, keys, n_keys=1)
 
         def post(df):
             row = df.select(F.col(f"`{quantile_column}`")).first()

@@ -3,10 +3,16 @@
 The privacy-critical physical details (reference
 ``measurements/spark_measurements.py:58-894``):
 
-* every output is **sanitized**: repartitioned by ``rand()`` and sorted
-  within partitions so row order / partitioning cannot leak input
-  order, then materialized so noise is sampled exactly once
-  (``utils/misc.sanitize_df``);
+* every output is **frozen exactly once**, on a branch picked by a
+  row bound the measurement knows before any draw: the public-key
+  count for grouped releases, the input's group count for SVT, the
+  pre-noise candidate count for partition selection.  Small releases
+  draw their noise driver-side over one bounded collect of the
+  pre-noise relation (``utils/misc.freeze_noised_release``) or pass
+  through ``utils/misc.sanitize_df`` (rand-keyed shuffle and sort
+  within partitions, then one Arrow collect); large ones take
+  ``sanitize_df``'s single parquet write.  No branch observes the size
+  of a noised relation;
 * noise UDFs are marked ``asNondeterministic()`` so Catalyst never
   re-executes, reorders, or pushes them down.
 """
@@ -36,34 +42,22 @@ from ..metrics import (
 )
 from ..utils.distributions import double_sided_geometric_cmf_exact
 from ..utils.grouped_dataframe import GroupedDataFrame
-from ..utils.misc import sanitize_df
+from ..utils.misc import persisted, sanitize_df
 from .noise import AddNoiseToSeries
 
 
 class SparkMeasurement(Measurement):
-    """Base for DataFrame-emitting measurements; handles sanitization."""
-
-    sanitize_output: bool = True
-    #: a-priori upper bound on the release's row count, when the caller
-    #: knows one (grouped releases: the public-key count).  Passed to
-    #: ``sanitize_df`` so the small/large freeze branch is chosen from
-    #: a constant instead of an observed probe — see sanitize_df's
-    #: accounting notes.  None = probe path.
-    known_release_rows = None
+    """Base for DataFrame-emitting measurements: the unfrozen release
+    from ``call_unsanitized`` leaves through ``sanitize_df`` with the
+    subclass's noise-independent ``release_rows(data)`` bound."""
 
     def call_unsanitized(self, data: Any) -> DataFrame:
         raise NotImplementedError
 
-    def release_rows(self, data: Any):
-        """A-priori row bound for this release, or None.  Overridden
-        where the bound lives on the input (GroupedDataFrame.n_keys)."""
-        return self.known_release_rows
-
     def __call__(self, data: Any) -> DataFrame:
-        out = self.call_unsanitized(data)
-        if not self.sanitize_output:
-            return out
-        return sanitize_df(out, known_rows=self.release_rows(data))
+        return sanitize_df(
+            self.call_unsanitized(data), known_rows=self.release_rows(data)
+        )
 
 
 class AddNoiseToColumn(SparkMeasurement):
@@ -80,12 +74,11 @@ class AddNoiseToColumn(SparkMeasurement):
         input_domain: SparkDataFrameDomain,
         measurement: AddNoiseToSeries,
         measure_column: str,
-        known_release_rows=None,
+        known_release_rows: int,
     ):
         """``known_release_rows``: a-priori upper bound on the release
-        row count (grouped releases: the public-key count), part of the
-        measurement's declared construction so callers cannot forget it
-        and silently fall back to the observed-probe freeze path."""
+        row count (grouped releases: the public-key count); it picks
+        the freeze branch."""
         if measure_column not in input_domain.schema:
             raise ValueError(f"Column {measure_column!r} not in domain")
         # The noise mechanism's scalar domain must match the column's
@@ -154,21 +147,22 @@ class AddNoiseToColumn(SparkMeasurement):
         (:func:`~..utils.misc.freeze_noised_release`): one Spark job,
         no ArrowEvalPython stage, no REBALANCE exchange — the same
         single-invocation pattern :class:`GeometricPartitionSelection`
-        ships.  Key sets above the small-release threshold (or callers
-        without a bound) keep the executor pandas-UDF path unchanged."""
-        if self.sanitize_output:
-            from ..utils.misc import freeze_noised_release
+        ships.  Key sets above the small-release threshold keep the
+        executor pandas-UDF path."""
+        from ..utils.misc import freeze_noised_release
 
-            inner = self.measurement
-            fn = None if inner.adds_no_noise else inner
-            frozen = freeze_noised_release(
-                data,
-                [(self.measure_column, fn, self._out_type())],
-                self.known_release_rows,
-            )
-            if frozen is not None:
-                return frozen
-        return super().__call__(data)
+        inner = self.measurement
+        fn = None if inner.adds_no_noise else inner
+        frozen = freeze_noised_release(
+            data,
+            [(self.measure_column, fn, self._out_type())],
+            self.known_release_rows,
+        )
+        if frozen is not None:
+            return frozen
+        return sanitize_df(
+            self.call_unsanitized(data), known_rows=self.known_release_rows
+        )
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         inner = self.measurement
@@ -191,18 +185,14 @@ class ApplyInPandas(SparkMeasurement):
 
     The per-group function sees a pandas DataFrame (empty for public
     keys with no rows) and — **required contract** — must return
-    exactly ``rows_per_group`` output rows per group.  Enforcement at
-    release time is AGGREGATE-ONLY: the freeze branch declares
-    ``n_keys * rows_per_group`` rows a priori and ``sanitize_df``
-    raises ``AssertionError`` when the total exceeds that bound, so a
-    per-group violation that nets out (one group over, another under)
-    is NOT caught — honoring the per-group shape is the aggregation
-    function's responsibility.  Every factory-built aggregation
-    (quantile, bounds, ...) is one-row-per-group.  A custom
-    multi-row-per-group aggregation must construct with
-    ``rows_per_group=None`` to opt out into the observed-size freeze
-    branch (then its release cardinality must not depend on any noise
-    draw), or pass its exact per-group row count (>= 1).
+    exactly ``rows_per_group`` output rows per group (default 1, as
+    for every factory-built aggregation; a multi-row aggregation
+    passes its exact per-group row count).  The release is frozen with
+    the public bound ``n_keys * rows_per_group``.  Enforcement is
+    AGGREGATE-ONLY: ``sanitize_df`` raises ``AssertionError`` when the
+    total exceeds that bound, so a per-group violation that nets out
+    (one group over, another under) is NOT caught — honoring the
+    per-group shape is the aggregation function's responsibility.
     """
 
     def __init__(
@@ -210,31 +200,23 @@ class ApplyInPandas(SparkMeasurement):
         input_domain: SparkGroupedDataFrameDomain,
         input_metric,
         aggregation_function,  # an Aggregate: pd.DataFrame -> pd.DataFrame
-        rows_per_group: Optional[int] = 1,
+        rows_per_group: int = 1,
     ):
         super().__init__(
             input_domain, input_metric, aggregation_function.output_measure
         )
         self.aggregation_function = aggregation_function
-        if rows_per_group is not None and rows_per_group < 1:
-            raise ValueError(
-                f"rows_per_group must be >= 1 or None (observed-size "
-                f"opt-out), got {rows_per_group}"
-            )
+        if rows_per_group < 1:
+            raise ValueError(f"rows_per_group must be >= 1, got {rows_per_group}")
         self.rows_per_group = rows_per_group
 
     def privacy_function(self, d_in: Any) -> Any:
         return self.aggregation_function.privacy_function(d_in)
 
-    def release_rows(self, data: GroupedDataFrame):
+    def release_rows(self, data: GroupedDataFrame) -> int:
         # rows_per_group output rows per public group key: the bound is
-        # a property of the keys, so the freeze branch needs no probe.
-        # rows_per_group=None opts a multi-row aggregation out into the
-        # observed-size branch (see class docstring).
-        if self.rows_per_group is None:
-            return None
-        n_keys = getattr(data, "n_keys", None)
-        return None if n_keys is None else n_keys * self.rows_per_group
+        # a property of the keys alone
+        return data.n_keys * self.rows_per_group
 
     def call_unsanitized(self, data: GroupedDataFrame) -> DataFrame:
         agg = self.aggregation_function
@@ -319,16 +301,12 @@ class GeometricPartitionSelection(SparkMeasurement):
             )
         return noisy.filter(F.col(self.count_column) >= self.threshold)
 
-    def call_unsanitized(self, data: DataFrame) -> DataFrame:
-        return self._noise_and_filter(self._pre_noise_counts(data))
-
     def __call__(self, data: DataFrame) -> DataFrame:
         """Release with a noise-independent freeze branch (r14).
 
         The release cardinality here depends on the noise draws (only
         groups whose NOISY count clears the threshold survive), so the
-        base class's observed-size freeze branch would observe a
-        discarded mechanism invocation.  Instead, ONE fused job
+        bound must come from before the draw.  ONE fused job
         (scan + map-side combine + shuffle + limit collect) freezes the
         PRE-noise candidate relation: no noise draw exists yet, so
         nothing observed here depends on any draw, the small/large
@@ -345,8 +323,6 @@ class GeometricPartitionSelection(SparkMeasurement):
         ``known_rows`` = the exact candidate count (> the small
         threshold by construction, still noise-independent).
         """
-        if not self.sanitize_output:
-            return self.call_unsanitized(data)
         from ..utils import misc as _misc
 
         counts = self._pre_noise_counts(data)
@@ -357,20 +333,11 @@ class GeometricPartitionSelection(SparkMeasurement):
             )
         # Rare huge-candidate-set path: re-aggregate once into a
         # persisted relation (the raw input pays one more scan total),
-        # draw noise on executors, freeze as one parquet write.  The
-        # cache check keeps ownership with the caller: Spark's
-        # CacheManager is keyed by plan, so unpersisting here would
-        # otherwise drop a caller's cache of the identical aggregate.
-        already_cached = counts.is_cached
-        if not already_cached:
-            counts = counts.persist()
-        try:
+        # draw noise on executors, freeze as one parquet write.
+        with persisted(counts):
             return sanitize_df(
                 self._noise_and_filter(counts), known_rows=counts.count()
             )
-        finally:
-            if not already_cached:
-                counts.unpersist()
 
     def _release_from_candidates(self, spark, head, schema) -> DataFrame:
         """Driver-side noise + threshold over the frozen candidate
@@ -473,10 +440,10 @@ class SparseVectorPrefixSums(SparkMeasurement):
             return ExactNumber(float("inf"))
         return ExactNumber(4) * d / self.alpha
 
-    def release_rows(self, data: DataFrame):
+    def release_rows(self, data: DataFrame) -> int:
         # exactly one released row per group PRESENT in the input — a
         # function of the data alone (no noise draw moves a group in or
-        # out of the release), so the freeze branch needs no probe.
+        # out of the release).
         # The input here is a tiny bin-count relation by construction,
         # so the extra distinct-count job is negligible.
         if self.grouping_columns:
@@ -509,7 +476,11 @@ class SparseVectorPrefixSums(SparkMeasurement):
         and the result embeds as an immutable ``LocalTableScan`` — the
         same freeze contract as ``sanitize_df``'s small branch.
         """
-        from ..utils.misc import SMALL_RELEASE_ROWS, _DRIVER_RELEASE_TYPES
+        from ..utils.misc import (
+            SMALL_RELEASE_ROWS,
+            _DRIVER_RELEASE_TYPES,
+            _collect_bounded,
+        )
 
         bound = self.known_input_rows
         if bound is None or bound > SMALL_RELEASE_ROWS:
@@ -527,14 +498,7 @@ class SparseVectorPrefixSums(SparkMeasurement):
 
         from .noise import AddGeometricNoise
 
-        head = narrow.limit(bound + 1).toArrow()
-        if head.num_rows > bound:
-            raise AssertionError(
-                f"SVT input produced more than the declared "
-                f"known_input_rows={bound} rows (>= {head.num_rows}); "
-                "the bin-count relation must have at most one row per "
-                "public (group, rank) pair"
-            )
+        head = _collect_bounded(narrow, bound, "known_input_rows")
         if any(head.column(c).null_count for c in used):
             return None
         pdf = head.to_pandas()
@@ -623,27 +587,11 @@ class SparseVectorPrefixSums(SparkMeasurement):
         :meth:`_driver_release`; ineligible inputs keep the persisted
         distributed path below unchanged.
         """
-        if not self.sanitize_output:
-            return self.call_unsanitized(data)
         frozen = self._driver_release(data)
         if frozen is not None:
             return frozen
-        from pyspark.storagelevel import StorageLevel
-
-        # Cache ownership stays with the caller: if the input is
-        # already persisted, re-persisting would be a no-op but the
-        # finally-unpersist would DROP the caller's cache entry and
-        # force every later use to re-run the full upstream plan.
-        already_cached = data.is_cached
-        if not already_cached:
-            data = data.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            return sanitize_df(
-                self.call_unsanitized(data), known_rows=self.release_rows(data)
-            )
-        finally:
-            if not already_cached:
-                data.unpersist()
+        with persisted(data):
+            return super().__call__(data)
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         from pyspark.sql import Window

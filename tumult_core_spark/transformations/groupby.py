@@ -14,6 +14,7 @@ which does not survive 100 TB key domains.
 from __future__ import annotations
 
 import itertools
+from functools import cached_property
 from typing import Any, Dict, List, Mapping, Optional, Sequence, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession
@@ -96,7 +97,15 @@ class GroupBy(Transformation):
         self.group_keys = group_keys.dropDuplicates()
         self.groupby_columns = groupby_columns
         self.use_l2 = use_l2
-        self.n_keys = n_keys
+        if n_keys is not None:
+            self.n_keys = n_keys
+
+    @cached_property
+    def n_keys(self) -> int:
+        """Upper bound on the public key count: the caller's count when
+        given, else the deduplicated keys counted once and memoised.
+        The keys are public, so the count is noise-independent."""
+        return self.group_keys.count()
 
     def stability_function(self, d_in: Any) -> Any:
         self.input_metric.validate(d_in)

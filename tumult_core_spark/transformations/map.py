@@ -186,6 +186,7 @@ def _widen_for_python(data: DataFrame) -> DataFrame:
     already-narrow (small) inputs, so the downside is bounded; a type
     ``xxhash64`` cannot hash falls back to the sorted round-robin.
     """
+    from pyspark.errors import AnalysisException
     from pyspark.sql import functions as F
 
     sc = data.sparkSession.sparkContext
@@ -195,7 +196,7 @@ def _widen_for_python(data: DataFrame) -> DataFrame:
             return data.repartition(
                 target, F.xxhash64(*[F.col(c) for c in data.columns])
             )
-        except Exception:
+        except AnalysisException:  # e.g. DATATYPE_MISMATCH.HASH_MAP_TYPE
             return data.repartition(target)
     return data
 

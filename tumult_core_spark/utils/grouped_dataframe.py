@@ -17,6 +17,7 @@ Spark already map-side combines.
 
 from __future__ import annotations
 
+from functools import cached_property
 from typing import Callable, List, Optional
 
 from pyspark.sql import Column, DataFrame
@@ -34,8 +35,8 @@ class GroupedDataFrame:
         n_keys: Optional[int] = None,
     ):
         """``n_keys``: upper bound on the key count when the caller
-        already knows it (literal key lists, column-domain products) —
-        lets the broadcast size gate skip a ``count()`` job."""
+        already knows it (literal key lists, column-domain products);
+        otherwise the deduplicated keys are counted on first use."""
         key_cols = group_keys.columns
         missing = [c for c in key_cols if c not in dataframe.columns]
         if missing:
@@ -50,7 +51,8 @@ class GroupedDataFrame:
                 )
         self._dataframe = dataframe
         self._group_keys = group_keys.dropDuplicates()
-        self._n_keys = n_keys
+        if n_keys is not None:
+            self.n_keys = n_keys
 
     @property
     def dataframe(self) -> DataFrame:
@@ -60,10 +62,11 @@ class GroupedDataFrame:
     def group_keys(self) -> DataFrame:
         return self._group_keys
 
-    @property
-    def n_keys(self) -> Optional[int]:
-        """Construction-time key-count bound, if the caller knew it."""
-        return self._n_keys
+    @cached_property
+    def n_keys(self) -> int:
+        """Upper bound on the public key count: the construction-time
+        count, else the deduplicated keys counted once and memoised."""
+        return self._group_keys.count()
 
     @property
     def groupby_columns(self) -> List[str]:
@@ -137,14 +140,10 @@ class GroupedDataFrame:
             cond = clause if cond is None else cond & clause
         # size-gated broadcast: public key sets are usually tiny, but a
         # column-domain product can be arbitrarily large — fall back to
-        # a shuffled semi-join instead of an unbounded broadcast.  The
-        # construction-time key count (len of a literal list, product
-        # of domain sizes) feeds the gate without a job; only key
-        # relations of unknown size pay a scalar count(), against the
-        # key relation, never the data.
+        # a shuffled semi-join instead of an unbounded broadcast.
         from tumult_core_spark.utils.scale import broadcast_below
 
-        n = self._n_keys if self._n_keys is not None else keys.count()
+        n = self.n_keys
         keys_hinted = broadcast_below(keys, n, est_row_bytes=32 * len(cols) + 32)
         present = self._dataframe.join(keys_hinted, cond, "left_semi")
 
@@ -160,10 +159,7 @@ class GroupedDataFrame:
         # second exchange.  At scale (n >= shuffle partitions) this is
         # a no-op.
         spark = self._dataframe.sparkSession
-        try:
-            shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        except Exception:
-            shuffle_parts = 200
+        shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         apply_parts = max(1, min(shuffle_parts, n))
 
         key_fields = [self._group_keys.schema[c] for c in cols]
@@ -284,5 +280,5 @@ class GroupedDataFrame:
     def select(self, columns: List[str]) -> "GroupedDataFrame":
         keep = list(dict.fromkeys(self.groupby_columns + columns))
         return GroupedDataFrame(
-            self._dataframe.select(*keep), self._group_keys, n_keys=self._n_keys
+            self._dataframe.select(*keep), self._group_keys, n_keys=self.n_keys
         )

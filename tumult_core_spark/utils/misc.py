@@ -5,9 +5,11 @@ reference performs via a ``saveAsTable`` round-trip
 (``tmlt/core/measurements/spark_measurements.py:58-76,877-894``,
 ``utils/misc.py:88-105``): destroy row-order / partitioning side
 channels and **freeze the sampled noise** so Spark retries or lazy
-re-evaluation can never re-sample it.  We materialize via a parquet
-write + read-back, which works identically on a real cluster (shared
-storage) and in local mode.
+re-evaluation can never re-sample it.  The caller's a-priori row
+bound picks the freeze: a bounded Arrow collect embedded as a local
+relation for small releases, a parquet write + read-back (identical
+on a real cluster with shared storage and in local mode) for large
+ones.
 """
 
 from __future__ import annotations
@@ -17,8 +19,10 @@ import os
 import shutil
 import tempfile
 import uuid
-from typing import Optional
+from contextlib import contextmanager
+from typing import Iterator, Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -171,72 +175,16 @@ def free_local_checkpoint(df: DataFrame) -> None:
 SMALL_RELEASE_ROWS = 50_000
 
 
-def sanitize_df(
-    df: DataFrame,
-    materialize_output: bool = True,
-    known_rows: Optional[int] = None,
-) -> DataFrame:
-    """Randomize partitioning and row order, then freeze the result.
-
-    Steps: add a ``rand()`` column, repartition on it (destroys any
-    data-dependent partitioning), sort within partitions by all output
-    columns (destroys residual input order), drop the helper column,
-    then freeze so nondeterministic noise is sampled exactly once.
-
-    Freezing holds on any cluster because each path has exactly ONE
-    release point.  ``limit(SMALL_RELEASE_ROWS + 1).toArrow()`` probes
-    the size: when the release fits (the common group-keys-sized case)
-    the collected Arrow table IS the frozen result —
-    ``createDataFrame(pa.Table)`` embeds it in the plan as an immutable
-    JVM ``LocalTableScan`` (NOT a Python-RDD scan: re-reads cost
-    ~10 ms, the relation broadcasts for free in downstream joins, and
-    the Arrow path round-trips nulls/NaN/date/decimal/nested types
-    exactly — all pinned by tests).  A larger release instead runs ONE
-    self-contained parquet write job (:func:`materialize`) and the
-    written files define the frozen release; the probe's sampled values
-    are discarded unobserved (running a mechanism twice and releasing
-    only one run's output is still one invocation of the mechanism), so
-    there is no cache or multi-job dependency that a lost executor
-    could invalidate — frozen-once holds on a real cluster, not just
-    local mode.
-
-    **Noise-independent branching (``known_rows``):** when the caller
-    knows an a-priori upper bound on the release cardinality — every
-    grouped release with PUBLIC group keys has at most one row per
-    declared key, so the bound is a property of the public keys, not
-    of the data or the noise — pass it as ``known_rows`` and the
-    small/large branch is chosen from that constant.  No observed
-    quantity influences the branch, so the single-invocation
-    accounting is exact.  A collected count EXCEEDING ``known_rows``
-    raises (a caller bug, never a data-dependent event, since both
-    sides are functions of the public keys).
-
-    **Every shipped measurement branches on a noise-independent bound**
-    (r14): grouped releases pass the public-key count, SVT passes the
-    input's group count, and partition selection never reaches the
-    probe at all — its own ``__call__`` freezes the PRE-noise
-    candidate relation in one job and draws its noise driver-side
-    (small case) or passes ``known_rows`` = the exact candidate count
-    (huge case).  Each bound is a function of the public keys or of
-    the data alone, never of a noise draw, so no release path
-    observes a discarded mechanism invocation and the
-    single-invocation accounting is exact everywhere.  The observed-size probe below
-    (``known_rows=None``) remains only as a fallback for EXTERNAL
-    callers; its branch choice observes the probe's row count, so a
-    caller whose release cardinality depends on a noise draw must
-    supply a noise-independent ``known_rows`` instead (as the shipped
-    measurements do) or account for the extra observation themselves.
-    The probe re-computes ≤50k rows of upstream plan on the large
-    path; large releases are rare and aggregate-shaped, so the extra
-    partial pass is noise next to the full write.  50k rows of a
-    grouped release is far below driver memory; anything bigger
-    belongs in parquet on shared storage anyway.
-    """
+def _shuffle_for_release(df: DataFrame) -> DataFrame:
+    """The pre-freeze relation :func:`sanitize_df` releases: a full
+    shuffle keyed on ``rand()`` (destroys any data-dependent
+    partitioning), then a sort within partitions by all output columns
+    (destroys residual input order)."""
     cols = df.columns
     # A release column literally named "__shuffle_key" must survive:
     # derive a name guaranteed absent from the schema.
     shuffle_key = get_nonconflicting_string(cols)
-    shuffled = (
+    return (
         df.withColumn(shuffle_key, F.rand())
         # REBALANCE (not plain repartition): same privacy effect — a full
         # shuffle keyed on rand() — but AQE right-sizes the partition
@@ -250,35 +198,83 @@ def sanitize_df(
         .sortWithinPartitions(*[F.col(f"`{c}`") for c in cols])
         .drop(shuffle_key)
     )
-    if not materialize_output:
-        return shuffled
-    if known_rows is not None:
-        # branch chosen from the a-priori cardinality bound: nothing
-        # observed (known_rows is an UPPER bound — GroupBy dedups the
-        # public keys, so a caller-supplied key list may overcount)
-        if known_rows <= SMALL_RELEASE_ROWS:
-            # limit() bounds the driver collect even when the caller's
-            # bound is wrong (a buggy aggregation emitting millions of
-            # rows must raise below, not OOM the driver first); in the
-            # correct case the relation has <= known_rows rows and the
-            # limit is a no-op
-            head = shuffled.limit(known_rows + 1).toArrow()
-            if head.num_rows > known_rows:
-                # the limit() caps the collect at known_rows + 1, so the
-                # true release size is unknown — only that it exceeds
-                # the declared bound
-                raise AssertionError(
-                    f"release produced more than the declared "
-                    f"known_rows={known_rows} rows (>= {head.num_rows}); "
-                    "grouped releases must have at most one row per "
-                    "public group key"
-                )
-            return df.sparkSession.createDataFrame(head, schema=shuffled.schema)
-        return materialize(shuffled)
-    head = shuffled.limit(SMALL_RELEASE_ROWS + 1).toArrow()
-    if head.num_rows <= SMALL_RELEASE_ROWS:
+
+
+def _collect_bounded(df: DataFrame, bound: int, bound_name: str = "known_rows"):
+    """Collect ``df`` to the driver as an Arrow table of at most
+    ``bound`` rows.
+
+    ``limit(bound + 1)`` caps the transfer even when the caller's bound
+    is wrong (a buggy aggregation emitting millions of rows must raise
+    here, not OOM the driver first); in the correct case the relation
+    has <= ``bound`` rows and the limit is a no-op.  Both sides are
+    functions of the public keys or of the pre-noise data, so an
+    over-bound result is a caller bug, never a data-dependent event.
+    """
+    head = df.limit(bound + 1).toArrow()
+    if head.num_rows > bound:
+        # the limit caps the collect at bound + 1, so the true size is
+        # unknown — only that it exceeds the declared bound
+        raise AssertionError(
+            f"relation produced more than the declared {bound_name}={bound} "
+            f"rows (>= {head.num_rows})"
+        )
+    return head
+
+
+def sanitize_df(df: DataFrame, known_rows: int) -> DataFrame:
+    """Randomize partitioning and row order, then freeze the result.
+
+    ``known_rows`` is the release's a-priori row bound: a function of
+    the public keys (grouped releases: at most one row per declared
+    key) or of the pre-noise data (SVT's group count, partition
+    selection's candidate count), never of a noise draw.  The bound
+    alone picks the freeze branch, so nothing observed here depends on
+    the noise and the single-invocation accounting is exact.  Each
+    branch has exactly ONE release point, on any cluster:
+
+    * ``known_rows <= SMALL_RELEASE_ROWS`` (the group-keys-sized common
+      case): one bounded Arrow collect IS the frozen result —
+      ``createDataFrame(pa.Table)`` embeds it as an immutable JVM
+      ``LocalTableScan`` (NOT a Python-RDD scan: re-reads cost ~10 ms,
+      the relation broadcasts for free in downstream joins, and the
+      Arrow path round-trips nulls/NaN/date/decimal/nested types
+      exactly — all pinned by tests).  A release with more rows than
+      the bound raises ``AssertionError`` (a caller bug).
+    * larger bounds: ONE self-contained parquet write job
+      (:func:`materialize`) whose files define the frozen release — no
+      cache or multi-job dependency that a lost executor could
+      invalidate.
+
+    The bound is an UPPER bound: fewer actual rows are fine (a
+    caller-supplied key list may repeat keys that GroupBy dedups).
+    """
+    shuffled = _shuffle_for_release(df)
+    if known_rows <= SMALL_RELEASE_ROWS:
+        head = _collect_bounded(shuffled, known_rows)
         return df.sparkSession.createDataFrame(head, schema=shuffled.schema)
     return materialize(shuffled)
+
+
+@contextmanager
+def persisted(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` for the duration of the block, then unpersist it.
+
+    Cache ownership stays with the caller: Spark's CacheManager is
+    keyed by plan, so when a cache of the same plan already exists
+    (``storageLevel`` looks it up; the Python-side ``is_cached`` flag
+    only knows about this object), the block reuses it and leaves it in
+    place — unpersisting would drop the caller's entry and force every
+    later use to re-run the full upstream plan.
+    """
+    if df.storageLevel != StorageLevel.NONE:
+        yield df
+        return
+    df.persist()
+    try:
+        yield df
+    finally:
+        df.unpersist()
 
 
 def coerce_lit(value, data_type):
@@ -308,7 +304,7 @@ def freeze_noised_release(df, noise_specs, known_rows):
 
     Returns the frozen release, or **None when ineligible** (caller
     falls back to the executor pandas-UDF path + :func:`sanitize_df`):
-    no bound, bound over :data:`SMALL_RELEASE_ROWS`, a non-primitive
+    bound over :data:`SMALL_RELEASE_ROWS`, a non-primitive
     column type, or nulls in a noise column.  Every ineligibility check
     runs BEFORE any mechanism invocation, so bailing out never discards
     a draw and the executor fallback is still the mechanism's single
@@ -332,7 +328,7 @@ def freeze_noised_release(df, noise_specs, known_rows):
     cannot re-sample).  At scale nothing changes: key sets above
     :data:`SMALL_RELEASE_ROWS` keep the distributed executor path.
     """
-    if known_rows is None or known_rows > SMALL_RELEASE_ROWS:
+    if known_rows > SMALL_RELEASE_ROWS:
         return None
     for fld in df.schema.fields:
         if fld.dataType.simpleString() not in _DRIVER_RELEASE_TYPES:
@@ -344,14 +340,7 @@ def freeze_noised_release(df, noise_specs, known_rows):
     import pyarrow as pa
     from pyspark.sql import types as T
 
-    head = df.limit(known_rows + 1).toArrow()
-    if head.num_rows > known_rows:
-        raise AssertionError(
-            f"release produced more than the declared "
-            f"known_rows={known_rows} rows (>= {head.num_rows}); "
-            "grouped releases must have at most one row per "
-            "public group key"
-        )
+    head = _collect_bounded(df, known_rows)
     # nulls in a spec column (impossible for the 0-filled factory
     # releases) would reach the mechanism as NaN — or silently turn
     # null into NaN on a pure cast: bail out pre-draw either way
