@@ -52,48 +52,6 @@ def chi2_pvalue(observed, expected):
 
 
 class TestSamplerDistributions:
-    def test_laplace_ks(self):
-        scale = 2.5
-        s = samplers.laplace(scale, N)
-
-        def cdf(x):
-            x = np.asarray(x, dtype=float)
-            return np.where(
-                x < 0, 0.5 * np.exp(x / scale), 1 - 0.5 * np.exp(-x / scale)
-            )
-
-        p = ks_pvalue(ks_statistic(s, cdf), N)
-        assert p > P_THRESHOLD, f"KS p={p}"
-
-    def test_gaussian_ks(self):
-        s = samplers.gaussian(4.0, N)
-
-        def cdf(x):
-            return 0.5 * (1 + np.vectorize(math.erf)(np.asarray(x) / (2 * math.sqrt(2))))
-
-        p = ks_pvalue(ks_statistic(s, cdf), N)
-        assert p > P_THRESHOLD, f"KS p={p}"
-
-    def test_two_sided_geometric_chi2(self):
-        alpha = 3.0
-        s = samplers.two_sided_geometric(alpha, N)
-        lo, hi = -30, 30
-        support = np.arange(lo, hi + 1)
-        observed = np.array([(s == k).sum() for k in support], dtype=float)
-        expected = double_sided_geometric_pmf(support, alpha) * N
-        p = chi2_pvalue(observed, expected)
-        assert p > P_THRESHOLD, f"chi2 p={p}"
-
-    def test_discrete_gaussian_chi2(self):
-        s2 = 6.0
-        s = samplers.discrete_gaussian(s2, N)
-        lo, hi = -15, 15
-        support = np.arange(lo, hi + 1)
-        observed = np.array([(s == k).sum() for k in support], dtype=float)
-        expected = discrete_gaussian_pmf(support, s2) * N
-        p = chi2_pvalue(observed, expected)
-        assert p > P_THRESHOLD, f"chi2 p={p}"
-
     def test_exact_vec_geometric_chi2(self):
         from fractions import Fraction
 
@@ -147,7 +105,10 @@ class TestSamplerDistributions:
     def test_exact_geometric_matches_distribution(self):
         from fractions import Fraction
 
-        s = np.array([samplers.geometric_exact(Fraction(2)) for _ in range(4000)])
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
+
+        mech = AddGeometricNoise(Fraction(2))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = double_sided_geometric_pmf(support, 2.0) * len(s)
@@ -157,9 +118,10 @@ class TestSamplerDistributions:
     def test_exact_discrete_gaussian_matches_distribution(self):
         from fractions import Fraction
 
-        s = np.array(
-            [samplers.discrete_gaussian_exact(Fraction(3)) for _ in range(4000)]
-        )
+        from tumult_core_spark.measurements.noise import AddDiscreteGaussianNoise
+
+        mech = AddDiscreteGaussianNoise(Fraction(3))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = discrete_gaussian_pmf(support, 3.0) * len(s)
@@ -167,11 +129,15 @@ class TestSamplerDistributions:
         assert p > P_THRESHOLD, f"chi2 p={p}"
 
     def test_exact_laplace_ks(self):
-        from tumult_core_spark import exact_sampling as es
+        from fractions import Fraction
+
+        from tumult_core_spark.domains import NumpyFloatDomain
+        from tumult_core_spark.measurements.noise import AddLaplaceNoise
 
         scale = 2.5
         n = 3000
-        s = np.array([es.sample_laplace(0.0, scale) for _ in range(n)])
+        mech = AddLaplaceNoise(NumpyFloatDomain(), Fraction(scale))
+        s = np.array([mech(0.0) for _ in range(n)])
 
         def cdf(x):
             x = np.asarray(x, dtype=float)
@@ -183,10 +149,12 @@ class TestSamplerDistributions:
         assert p > P_THRESHOLD, f"KS p={p}"
 
     def test_exact_gaussian_ks(self):
-        from tumult_core_spark import exact_sampling as es
+        from tumult_core_spark.domains import NumpyFloatDomain
+        from tumult_core_spark.measurements.noise import AddGaussianNoise
 
         n = 400
-        s = np.array([es.sample_gaussian(4.0) for _ in range(n)])
+        mech = AddGaussianNoise(NumpyFloatDomain(), 4)
+        s = np.array([mech(0.0) for _ in range(n)])
 
         def cdf(x):
             return 0.5 * (
@@ -368,18 +336,24 @@ class TestSamplerDistributions:
 
     def test_exact_samplers_huge_denominators(self):
         # Fraction(float) parameters have ~2^52 denominators, squared to
-        # ~2^104 inside the acceptance gamma; the exact Bernoulli must
-        # handle arbitrary-precision denominators (regression: NumPy
-        # integers() raised ValueError past int64).
+        # ~2^104 inside the acceptance gamma; the exact acceptance test
+        # must handle arbitrary-precision denominators (regression:
+        # NumPy integers() raised ValueError past int64).
         from fractions import Fraction
 
+        from tumult_core_spark.measurements.noise import (
+            AddDiscreteGaussianNoise,
+            AddGeometricNoise,
+        )
+
         s2 = Fraction(2.3456789012345)  # denominator ~2^51
-        draws = [samplers.discrete_gaussian_exact(s2) for _ in range(50)]
-        assert all(isinstance(d, int) for d in draws)
+        dgauss = AddDiscreteGaussianNoise(s2)
+        draws = [dgauss(0) for _ in range(50)]
+        assert all(isinstance(d, np.int64) for d in draws)
         assert any(d != 0 for d in draws)
-        g = [samplers.geometric_exact(Fraction(1.9999999999991)) for _ in range(50)]
+        geo = AddGeometricNoise(Fraction(1.9999999999991))
+        g = [geo(0) for _ in range(50)]
         assert any(x != 0 for x in g)
-        assert samplers._randbelow(1 << 200) < (1 << 200)
 
 
 class TestFullSparkPathNoise:

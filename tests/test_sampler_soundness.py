@@ -20,15 +20,16 @@ extreme-scale and RNG-lifecycle corners:
   coverage) — naive ``scale * log(u)`` samplers concentrate on a
   sparse achievable set.
 * **Extreme scales**: subnormal/near-subnormal sigma^2 must route
-  through the scalar interval sampler (the r17-fixed guard: the old
+  through the interval-arithmetic resolver (the r17-fixed guard: the old
   ``sigma_squared < _EXTREME_SCALE**2`` underflowed to 0.0 and never
   fired, while dd.sqrt's error at 1e-300 is 2^-79 — above the 2^-88
   certification budget); huge scales must fail closed (OverflowError)
   rather than emit int64-wrapped noise.
-* **Scalar samplers at large scale**: the r17 band-inversion rewrite
-  must draw in O(1) for any scale (the old Bernoulli-counting loop
-  cost O(scale) and tripped a 1e7 magnitude cap, a ~37%-per-draw crash
-  at scale 1e7).
+* **Scalar mechanism calls at large scale**: the r17 band-inversion
+  rewrite must draw in O(1) for any scale (the old Bernoulli-counting
+  loop cost O(scale) and tripped a 1e7 magnitude cap, a ~37%-per-draw
+  crash at scale 1e7); a scalar call is the vector sampler's first
+  draw for a one-element batch.
 * **RNG independence across fork** (executor workers): forked children
   must reseed, never continue the parent's PCG64 stream.
 """
@@ -285,21 +286,25 @@ class TestExtremeScales:
 
 
 class TestScalarSamplersAtScale:
+    """The mechanisms' scalar call at large scale.  It draws through the
+    certified vector samplers (a one-element batch), so these pin that
+    path's O(1)-per-draw cost at any scale."""
+
     def test_geometric_exact_large_scale_terminates_fast(self):
         """r17: band inversion replaced the O(scale) Bernoulli loop —
         a single draw at scale 1e7 previously crashed the 1e7 magnitude
         cap with probability ~e^-1 and cost minutes otherwise."""
         import time
 
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
+
+        mech = AddGeometricNoise(10**7)
         t0 = time.time()
-        vals = [samplers.geometric_exact(10**7) for _ in range(20)]
+        vals = [mech(0) for _ in range(20)]
         assert time.time() - t0 < 10.0
         mags = np.abs(np.array(vals, dtype=float))
         assert mags.max() > 1e6  # typical |k| ~ scale
         assert mags.max() < 40 * 1e7
-        # big-int support: scales whose draws exceed int64 still work
-        v = samplers.geometric_exact(Fraction(10**20))
-        assert isinstance(v, int) and abs(v) < 40 * 10**20
 
     def test_geometric_exact_distribution_unchanged(self):
         """chi^2 pin that the inversion rewrite preserves the law."""
@@ -307,8 +312,10 @@ class TestScalarSamplersAtScale:
             chi2_pvalue,
             double_sided_geometric_pmf,
         )
+        from tumult_core_spark.measurements.noise import AddGeometricNoise
 
-        s = np.array([samplers.geometric_exact(Fraction(2)) for _ in range(4000)])
+        mech = AddGeometricNoise(Fraction(2))
+        s = np.array([mech(0) for _ in range(4000)])
         support = np.arange(-8, 9)
         observed = np.array([(s == k).sum() for k in support], dtype=float)
         expected = double_sided_geometric_pmf(support, 2.0) * len(s)
@@ -317,11 +324,70 @@ class TestScalarSamplersAtScale:
     def test_discrete_gaussian_exact_large_sigma_fast(self):
         import time
 
+        from tumult_core_spark.measurements.noise import AddDiscreteGaussianNoise
+
+        mech = AddDiscreteGaussianNoise(Fraction(10**12))
         t0 = time.time()
-        vals = [samplers.discrete_gaussian_exact(Fraction(10**12)) for _ in range(10)]
+        vals = [mech(0) for _ in range(10)]
         assert time.time() - t0 < 20.0
         mags = np.abs(np.array(vals, dtype=float))
         assert mags.max() > 1e5 and mags.max() < 10 * 1e6  # sigma = 1e6
+
+
+class TestScalarCallIsVectorPath:
+    """``mech(v)`` is the vector sampler's first draw for ``[v]``: under
+    the same pinned seed both consume the same words and return the
+    same value, with the scalar call's numpy return type."""
+
+    V_FLOAT = 12.375
+    V_INT = 41
+
+    @pytest.mark.parametrize("seed", [1, 7, 2024])
+    def test_each_mechanism_matches_its_vector_sampler(self, seed):
+        from tumult_core_spark.domains import NumpyFloatDomain
+        from tumult_core_spark.measurements.noise import (
+            AddDiscreteGaussianNoise,
+            AddGaussianNoise,
+            AddGeometricNoise,
+            AddLaplaceNoise,
+        )
+
+        vf, vi = self.V_FLOAT, self.V_INT
+        cases = [
+            (
+                AddLaplaceNoise(NumpyFloatDomain(), 3),
+                vf,
+                lambda: exact_sampling.laplace_exact_vec(np.array([vf]), 3.0),
+                np.float64,
+            ),
+            (
+                AddGaussianNoise(NumpyFloatDomain(), 5),
+                vf,
+                lambda: exact_sampling.gaussian_exact_vec(np.array([vf]), 5.0),
+                np.float64,
+            ),
+            (
+                AddGeometricNoise(Fraction(7, 2)),
+                vi,
+                lambda: np.array([vi])
+                + samplers.two_sided_geometric_exact_vec(Fraction(7, 2), 1),
+                np.int64,
+            ),
+            (
+                AddDiscreteGaussianNoise(6),
+                vi,
+                lambda: np.array([vi])
+                + samplers.discrete_gaussian_exact_vec(Fraction(6), 1),
+                np.int64,
+            ),
+        ]
+        for mech, value, vector, dtype in cases:
+            _seeded(seed)
+            got = mech(value)
+            _seeded(seed)
+            want = vector()[0]
+            assert type(got) is dtype, (type(mech).__name__, type(got))
+            assert got == want, (type(mech).__name__, got, want)
 
 
 def _child_draws(_):

@@ -5,9 +5,6 @@ factories, scalar noise mechanism classes, metric edge classes,
 sources/io round-trips, domain descriptors, and the exact
 distribution/double-double helper functions."""
 
-import math
-from fractions import Fraction
-
 import numpy as np
 import pytest
 
@@ -300,14 +297,6 @@ class TestScalarMechanismsDirect:
         with pytest.raises(ValueError, match=r"\(0, 1\]"):
             inv(0, ExactNumber(2))
         assert inv(1, ExactNumber(0)) == 0
-
-    def test_bernoulli_exp_mean(self):
-        from tumult_core_spark.samplers import bernoulli_exp
-
-        gamma = Fraction(1, 2)
-        n = 4000
-        mean = sum(bernoulli_exp(gamma) for _ in range(n)) / n
-        assert abs(mean - math.exp(-0.5)) < 0.05
 
 
 class TestMetricEdges:

@@ -6,16 +6,15 @@ IEEE doubles with ``|lo| <= ulp(hi)/2``, giving ~32 significant
 digits.  All operations below are branch-free NumPy array expressions
 (error-free transformations: Knuth two-sum, Dekker split two-prod), so
 they vectorize over millions of elements — this is what lets the
-continuous noise column path keep the scalar interval samplers'
-correct-rounding guarantee (exact_sampling.py) without a per-value
-Python loop.
+continuous noise samplers keep interval arithmetic's correct-rounding
+guarantee (exact_sampling.py) without a per-value Python loop.
 
 Error model used by callers: each dd primitive has relative error
 <= 2^-102; the transcendental kernels (exp/log/sqrt/cos) below are
 implemented to <= 2^-95 relative, and callers budget a conservative
 2^-88 in their certification margins.  The margin only has to be an
 UPPER bound on the true error — overestimating it merely sends a few
-more draws to the rigorous scalar fallback.
+more draws to the rigorous per-value fallback.
 
 All public techniques: this is the standard QD/Dekker construction
 (Dekker 1971; Hida, Li & Bailey 2001) plus textbook argument-reduced
@@ -207,8 +206,8 @@ def sqrt(a: DD) -> DD:
     Accuracy holds for NORMAL-range inputs (|a| in [1e-290, 1e290]):
     near the subnormal boundary the error-free transformations'
     correction legs underflow and accuracy degrades to plain double.
-    Callers with smaller scales must route through the scalar interval
-    samplers instead (see exact_sampling._EXTREME_SCALE).
+    Callers with smaller scales must route through the interval-
+    arithmetic resolvers instead (see exact_sampling._EXTREME_SCALE).
     """
     s0 = np.sqrt(a[0])
     s0sq = two_prod(s0, s0)

@@ -12,7 +12,7 @@ refined randomness:
 
 1. draw ``step`` more random bits, defining the dyadic probability
    interval ``p in [bits/2^n, (bits+1)/2^n]``;
-2. evaluate the (monotone) inverse CDF at both endpoints in rigorous
+2. evaluate the (monotone) transform at both endpoints in rigorous
    interval arithmetic at ~n bits of working precision;
 3. if every real in the image interval rounds to the same IEEE double,
    return it; otherwise draw more bits and repeat.
@@ -22,12 +22,17 @@ sample, the result carries none of the float-artifact structure that
 naive ``scale * log(u)``-style samplers leak (the vulnerability class
 in the reference's ``doc/topic-guides/known-vulnerabilities.rst``).
 
-Uniform needs no transcendental functions, so it runs entirely in
-exact ``Fraction`` arithmetic.  Laplace uses ``iv.log``.  Gaussian
-needs ``erfinv``, which ``mpmath.iv`` lacks: the candidate comes from
-scalar ``mpmath.erfinv`` and is then *verified* (and widened if
-needed) through the rigorous ``iv.erf`` enclosure, using monotonicity
-of ``erf`` — so the final interval is certified, not trusted.
+Uniform needs no transcendental functions, so :func:`sample_uniform`
+runs entirely in exact ``Fraction`` arithmetic.  Laplace and Gaussian
+have ONE sampler each, vectorized: :func:`laplace_exact_vec` and
+:func:`gaussian_exact_vec` evaluate the transform over a 106-bit
+uniform prefix in double-double arithmetic (``dd.py``) and certify the
+rounding with a rigorous margin; the rare draws the margin cannot
+certify continue the same prefix through the interval-arithmetic
+resolvers :func:`_resolve_laplace` and :func:`_resolve_gaussian_pair`.
+A single noisy value is a one-element batch.  The certified
+``erf``/``erfinv`` enclosures (:func:`_iv_erf`,
+:func:`_erfinv_enclosure`) serve the PRDP sampler in ``prdp.py``.
 
 ``select_noisy_argmax`` is the exponential-mechanism selection: a
 vectorized NumPy pass brackets every candidate's Gumbel-noised score
@@ -41,7 +46,7 @@ one remains — the same elimination loop as the reference's
 from __future__ import annotations
 
 from fractions import Fraction
-from typing import List, Optional, Sequence, Tuple
+from typing import List, Optional, Tuple
 
 import numpy as np
 
@@ -91,7 +96,7 @@ def sample_uniform(lower: float, upper: float, step_size: int = 63) -> float:
 
 
 # ---------------------------------------------------------------------------
-# Interval-arithmetic inverse-CDF samplers (Laplace, Gaussian)
+# Interval-arithmetic building blocks (Laplace resolver, erf/erfinv)
 # ---------------------------------------------------------------------------
 
 
@@ -134,8 +139,10 @@ def _resolve_laplace(
     """Finish a Laplace draw whose uniform prefix ``bits/2^n`` is
     already revealed: extend the SAME prefix until the icdf image
     interval rounds to a unique double.  (Continuing the prefix — not
-    resampling — is what keeps the vectorized fast path exactly
-    distribution-equal to the scalar sampler.)"""
+    resampling — is what keeps every draw of
+    :func:`laplace_exact_vec` the correct rounding of the icdf at one
+    infinite-precision uniform.)  ``n == 0`` starts from no revealed
+    bits."""
     import mpmath
 
     iv = mpmath.iv
@@ -156,16 +163,6 @@ def _resolve_laplace(
         # iv.prec is GLOBAL mpmath state: restore so a raised/returned
         # path never leaks an inflated working precision (r17 hygiene)
         iv.prec = old_prec
-
-
-def sample_laplace(mu: float, b: float, step_size: int = 63) -> float:
-    """Laplace(mu, b) draw via rigorous interval inverse-CDF
-    (reference ``random/laplace.py:12-49``)."""
-    if not b >= 0:
-        raise ValueError("scale must be >= 0")
-    if b == 0:
-        return float(mu)
-    return _resolve_laplace(mu, b, 0, 0, step_size)
 
 
 def _iv_erf(y, iv):
@@ -225,48 +222,13 @@ def _erfinv_enclosure(x_num: int, x_den_log2: int, prec: int, iv, mpmath):
     raise RuntimeError("erfinv enclosure failed to certify")
 
 
-def sample_gaussian(
-    sigma_squared: float, mu: float = 0.0, step_size: int = 63
-) -> float:
-    """N(mu, sigma^2) draw via certified interval inverse-CDF
-    (reference ``random/continuous_gaussian.py:13-97``):
-    ``mu + sqrt(sigma^2) sqrt(2) erfinv(2p - 1)``."""
-    import mpmath
-
-    if not sigma_squared >= 0:
-        raise ValueError("sigma_squared must be >= 0")
-    if sigma_squared == 0:
-        return float(mu)
-    iv = mpmath.iv
-    old_prec = iv.prec
-    n = 0
-    bits = 0
-    try:
-        while True:
-            bits = (bits << step_size) | _randbits(step_size)
-            n += step_size
-            if bits == 0 or bits + 1 == (1 << n):
-                continue
-            iv.prec = n + 20
-            scale = iv.sqrt(iv.mpf(sigma_squared)) * iv.sqrt(iv.mpf(2))
-            # 2p - 1 at p = bits/2^n is the exact dyadic (2*bits - 2^n)/2^n
-            lo = _erfinv_enclosure(2 * bits - (1 << n), n, n + 20, iv, mpmath)
-            hi = _erfinv_enclosure(2 * (bits + 1) - (1 << n), n, n + 20, iv, mpmath)
-            out = iv.mpf(mu) + scale * iv.mpf([lo.a, hi.b])
-            a, c = _endpoint_float(out.a), _endpoint_float(out.b)
-            if a == c:
-                return a
-    finally:
-        iv.prec = old_prec  # global mpmath state; see _resolve_laplace
-
-
 # ---------------------------------------------------------------------------
 # Vectorized certified continuous samplers (the column hot path)
 # ---------------------------------------------------------------------------
 #
-# Same guarantee as the scalar samplers above — the returned double is
-# determined by the true real-valued sample (rounding pushforward of
-# the continuous distribution) — but over a whole NumPy array at once:
+# The returned double is determined by the true real-valued sample
+# (rounding pushforward of the continuous distribution), over a whole
+# NumPy array at once:
 #
 # 1. reveal a 106-bit uniform prefix per element (two 53-bit draws,
 #    exactly representable as a double-double);
@@ -276,8 +238,8 @@ def sample_gaussian(
 #    (derivative-over-interval + arithmetic error);
 # 3. accept elements whose margin-widened enclosure rounds to a unique
 #    double (all but ~1e-11 of draws); the rest CONTINUE THE SAME
-#    PREFIX through the scalar interval loop, so the output law is
-#    exactly the scalar sampler's, not an approximation of it.
+#    PREFIX through the interval-arithmetic resolver, so the output
+#    law is exact, not an approximation of it.
 
 _TWO53F = float(1 << 53)
 _H106 = 2.0**-106  # prefix interval width
@@ -285,8 +247,8 @@ _ARITH_REL = 2.0**-88  # conservative dd pipeline error budget
 _SLOP = 1.000001  # absorbs float rounding of the margin arithmetic itself
 # below this scale the double-double error-free transformations start
 # underflowing into subnormals and the 2^-88 budget no longer holds;
-# such (absurd, but legal) scales route every draw through the scalar
-# interval loop instead of the vectorized fast path
+# such (absurd, but legal) scales route every draw through the
+# interval-arithmetic resolver instead of the double-double fast path
 _EXTREME_SCALE = 1e-280
 # dd.sqrt's separate floor: its internal two_prod(s0, s0) error leg
 # underflows once the ARGUMENT (sigma^2, not sigma) nears the
@@ -354,7 +316,8 @@ def laplace_exact_vec(mu: np.ndarray, b: float) -> np.ndarray:
     """Certified Laplace(mu_i, b) draws, one per element of ``mu``.
 
     Inverse CDF ``mu - b sgn(p-1/2) log(1-2|p-1/2|)`` evaluated in
-    double-double; distribution identical to :func:`sample_laplace`.
+    double-double (reference ``random/laplace.py:12-49``); each output
+    is the correct rounding of the true Laplace(mu_i, b) real.
     """
     from . import dd as _dd
 
@@ -452,11 +415,12 @@ def gaussian_exact_vec(mu: np.ndarray, sigma_squared: float) -> np.ndarray:
     """Certified N(mu_i, sigma^2) draws, one per element of ``mu``.
 
     Box-Muller ``mu + sigma sqrt(-2 ln u) cos(2 pi v)`` in double-
-    double.  The transform differs from :func:`sample_gaussian`'s
-    erfinv inverse-CDF, but the OUTPUT law is the same: both are the
-    double-rounding pushforward of a true N(mu, sigma^2) real (erfinv
-    has no vectorizable certified form; Box-Muller needs only
-    log/sqrt/cos, which dd.py provides with rigorous error bounds).
+    double.  The transform differs from the reference's erfinv
+    inverse CDF (``random/continuous_gaussian.py:13-97``), but the
+    OUTPUT law is the same: the double-rounding pushforward of a true
+    N(mu, sigma^2) real (erfinv has no vectorizable certified form;
+    Box-Muller needs only log/sqrt/cos, which dd.py provides with
+    rigorous error bounds).
     """
     from . import dd as _dd
 

@@ -923,12 +923,7 @@ class FusedMomentsMeasurement(Measurement):
                 series_mech = AddNoiseToSeries(mech)
                 if series_mech.adds_no_noise:
                     continue
-                out_type = (
-                    "double"
-                    if type(mech).__name__ in ("AddLaplaceNoise", "AddGaussianNoise")
-                    else "long"
-                )
-                specs.append((s, series_mech, out_type))
+                specs.append((s, series_mech, mech.release_type))
             known_rows = gdf.n_keys
             # public-key-bounded release: draw all three statistics'
             # noise driver-side over the frozen pre-noise aggregate —

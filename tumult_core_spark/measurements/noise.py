@@ -1,10 +1,13 @@
-"""Additive noise mechanisms (scalar and vectorized).
+"""Additive noise mechanisms.
 
 ``AddLaplaceNoise`` / ``AddGeometricNoise`` / ``AddGaussianNoise`` /
-``AddDiscreteGaussianNoise`` operate on numpy scalars;
-``AddNoiseToSeries`` lifts any of them over a ``pd.Series`` in one
-vectorized NumPy call — the body of the Arrow-batched pandas UDF used
-by :class:`~.spark.AddNoiseToColumn`.
+``AddDiscreteGaussianNoise`` each have ONE sampling path,
+``add_noise_to_array``, which draws from the certified vector sampler
+of its distribution.  ``mech(value)`` is that path on a one-element
+array; ``AddNoiseToSeries`` lifts it over a ``pd.Series`` — the body
+of the Arrow-batched pandas UDF used by
+:class:`~.spark.AddNoiseToColumn` and of the driver-side draw of
+:func:`~..utils.misc.freeze_noised_release`.
 
 Privacy functions (reference ``measurements/noise_mechanisms.py:38-560``):
 
@@ -14,21 +17,18 @@ Privacy functions (reference ``measurements/noise_mechanisms.py:38-560``):
   (2 sigma^2)`` (RhoZCDP)
 
 ``scale == 0`` short-circuits to the identity — the deterministic mode
-correctness oracles rely on.  ALL FOUR mechanisms are exact on BOTH
-paths: the integer mechanisms use Fraction rejection samplers
-(scalar) and certified-inversion vectorized samplers (column, see
-``samplers.py``); the continuous mechanisms use rigorous interval
-inverse-CDF samplers (scalar) and certified double-double vectorized
-samplers (column, see ``exact_sampling.py`` / ``dd.py``) — the
-returned double is always the rounding of the true real-valued
-sample, closing the float-artifact vulnerability class on the grouped
-noisy-aggregate hot path as well.
+correctness oracles rely on.  All four samplers are exact: the integer
+mechanisms use certified-inversion / certified-rejection samplers
+(``samplers.py``), the continuous mechanisms certified double-double
+samplers (``exact_sampling.py`` / ``dd.py``) — the returned double is
+always the rounding of the true real-valued sample, so no float
+artifact reaches a release.
 """
 
 from __future__ import annotations
 
 from fractions import Fraction
-from typing import Any, Union
+from typing import Any
 
 import numpy as np
 import pandas as pd
@@ -46,15 +46,27 @@ from ..metrics import AbsoluteDifference
 
 
 class _NoiseMechanism(Measurement):
-    """Shared scalar-mechanism plumbing."""
+    """Shared noise-mechanism plumbing."""
+
+    #: Spark SQL type of a noised release column: ``"double"`` for the
+    #: continuous mechanisms, ``"long"`` for the integer ones.
+    release_type: str
 
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
-        """Vectorized noise over a float/int array (executor hot path)."""
+        """Noise over a float/int array: the mechanism's only sampler."""
         raise NotImplementedError
+
+    def __call__(self, value):
+        """One noisy value, drawn through :meth:`add_noise_to_array`
+        (``np.float64`` for continuous, ``np.int64`` for integer
+        noise)."""
+        return self.add_noise_to_array(np.asarray([value]))[0]
 
 
 class AddLaplaceNoise(_NoiseMechanism):
     """value + Laplace(scale); epsilon = d_in / scale."""
+
+    release_type = "double"
 
     def __init__(self, input_domain, scale: ExactNumberInput):
         self.scale = ExactNumber(scale)
@@ -78,21 +90,11 @@ class AddLaplaceNoise(_NoiseMechanism):
             return ExactNumber(0)  # data-independent output; see AddGeometricNoise
         return d / self.scale
 
-    def __call__(self, value) -> np.float64:
-        if self.scale == 0:
-            return np.float64(value)
-        # scalar path: floating-point-safe interval inverse-CDF sampler
-        # (reference random/laplace.py:12-49)
-        from .. import exact_sampling
-
-        return np.float64(exact_sampling.sample_laplace(float(value), self._scale_float))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
         if self.scale == 0:
             return values.astype(np.float64)
-        # certified vectorized sampler: same distribution as the
-        # scalar interval path (value inside the enclosure, so the
-        # final float addition is certified too, not rounded on top)
+        # certified vectorized sampler (value inside the enclosure, so
+        # the final float addition is certified too, not rounded on top)
         from .. import exact_sampling
 
         return exact_sampling.laplace_exact_vec(
@@ -102,6 +104,8 @@ class AddLaplaceNoise(_NoiseMechanism):
 
 class AddGeometricNoise(_NoiseMechanism):
     """value + two-sided geometric(alpha); integer in, integer out."""
+
+    release_type = "long"
 
     def __init__(self, alpha: ExactNumberInput):
         self.alpha = ExactNumber(alpha)
@@ -137,17 +141,6 @@ class AddGeometricNoise(_NoiseMechanism):
             return ExactNumber(0)
         return d / self.alpha
 
-    def __call__(self, value) -> np.int64:
-        if self.alpha == 0:
-            return np.int64(value)
-        if self._alpha_frac is None:
-            raise ValueError(
-                "Cannot sample two-sided geometric noise with infinite alpha "
-                "(an epsilon=0 budget admits no data-dependent integer output)"
-            )
-        # exact Fraction sampler on the scalar path
-        return np.int64(int(value) + samplers.geometric_exact(self._alpha_frac))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
         if self.alpha == 0:
             return values.astype(np.int64)
@@ -156,8 +149,7 @@ class AddGeometricNoise(_NoiseMechanism):
                 "Cannot sample two-sided geometric noise with infinite alpha "
                 "(an epsilon=0 budget admits no data-dependent integer output)"
             )
-        # exact certified-inversion sampler, vectorized (the column
-        # path matches the scalar path's distribution exactly)
+        # exact certified-inversion sampler
         return values.astype(np.int64) + samplers.two_sided_geometric_exact_vec(
             self._alpha_frac, len(values)
         )
@@ -165,6 +157,8 @@ class AddGeometricNoise(_NoiseMechanism):
 
 class AddGaussianNoise(_NoiseMechanism):
     """value + N(0, sigma^2); rho = d_in^2 / (2 sigma^2) (zCDP)."""
+
+    release_type = "double"
 
     def __init__(self, input_domain, sigma_squared: ExactNumberInput):
         self.sigma_squared = ExactNumber(sigma_squared)
@@ -187,17 +181,6 @@ class AddGaussianNoise(_NoiseMechanism):
             return ExactNumber(0)  # data-independent output; see AddGeometricNoise
         return d**2 / (self.sigma_squared * 2)
 
-    def __call__(self, value) -> np.float64:
-        if self.sigma_squared == 0:
-            return np.float64(value)
-        # scalar path: certified interval inverse-CDF sampler
-        # (reference random/continuous_gaussian.py:13-97)
-        from .. import exact_sampling
-
-        return np.float64(
-            exact_sampling.sample_gaussian(self._ss_float, mu=float(value))
-        )
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
         if self.sigma_squared == 0:
             return values.astype(np.float64)
@@ -211,6 +194,8 @@ class AddGaussianNoise(_NoiseMechanism):
 
 class AddDiscreteGaussianNoise(_NoiseMechanism):
     """value + discrete Gaussian(sigma^2); integer support (zCDP)."""
+
+    release_type = "long"
 
     def __init__(self, sigma_squared: ExactNumberInput):
         self.sigma_squared = ExactNumber(sigma_squared)
@@ -240,16 +225,6 @@ class AddDiscreteGaussianNoise(_NoiseMechanism):
             return ExactNumber(0)  # data-independent output; see AddGeometricNoise
         return d**2 / (self.sigma_squared * 2)
 
-    def __call__(self, value) -> np.int64:
-        if self.sigma_squared == 0:
-            return np.int64(value)
-        if self._ss_frac is None:
-            raise ValueError(
-                "Cannot sample discrete Gaussian noise with infinite sigma^2 "
-                "(a rho=0 budget admits no data-dependent integer output)"
-            )
-        return np.int64(int(value) + samplers.discrete_gaussian_exact(self._ss_frac))
-
     def add_noise_to_array(self, values: np.ndarray) -> np.ndarray:
         if self.sigma_squared == 0:
             return values.astype(np.int64)
@@ -258,7 +233,7 @@ class AddDiscreteGaussianNoise(_NoiseMechanism):
                 "Cannot sample discrete Gaussian noise with infinite sigma^2 "
                 "(a rho=0 budget admits no data-dependent integer output)"
             )
-        # exact certified-rejection sampler, vectorized
+        # exact certified-rejection sampler
         return values.astype(np.int64) + samplers.discrete_gaussian_exact_vec(
             self._ss_frac, len(values)
         )

@@ -24,7 +24,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import types as T
 
-from .. import exact_sampling, samplers
+from .. import exact_sampling
 from ..base import Measurement
 from ..domains import (
     NumpyFloatDomain,

@@ -127,20 +127,6 @@ class AddNoiseToColumn(SparkMeasurement):
     def privacy_function(self, d_in: Any) -> Any:
         return self.measurement.privacy_function(d_in)
 
-    def _out_type(self) -> str:
-        from .noise import AddGaussianNoise, AddLaplaceNoise
-
-        # Laplace/Gaussian emit continuous values; geometric/discrete
-        # Gaussian stay integral.
-        return (
-            "double"
-            if isinstance(
-                self.measurement.noise_mechanism,
-                (AddLaplaceNoise, AddGaussianNoise),
-            )
-            else "long"
-        )
-
     def __call__(self, data: DataFrame) -> DataFrame:
         """Grouped releases with a public-key row bound draw their
         noise DRIVER-side over the frozen pre-noise aggregate
@@ -155,7 +141,7 @@ class AddNoiseToColumn(SparkMeasurement):
         fn = None if inner.adds_no_noise else inner
         frozen = freeze_noised_release(
             data,
-            [(self.measure_column, fn, self._out_type())],
+            [(self.measure_column, fn, inner.noise_mechanism.release_type)],
             self.known_release_rows,
         )
         if frozen is not None:
@@ -166,7 +152,7 @@ class AddNoiseToColumn(SparkMeasurement):
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         inner = self.measurement
-        out_type = self._out_type()
+        out_type = inner.noise_mechanism.release_type
         if inner.adds_no_noise:
             return data.withColumn(
                 self.measure_column, F.col(self.measure_column).cast(out_type)

@@ -1,45 +1,29 @@
-"""Noise samplers.
+"""Certified integer noise samplers and the process RNG.
 
-Two tiers, same distributions:
+One sampler per integer noise distribution, each drawing a whole
+NumPy batch at once:
 
-* **Vectorized float samplers** (NumPy) — fast distribution-level
-  reference implementations, now used only by the distribution test
-  suite as the comparison baseline; every production noise path
-  (scalar, column, and streaming) draws from the exact samplers below
-  or from ``exact_sampling.py``.  They replace the reference's
-  per-value ``Series.apply`` loops
-  (``pandas_measurements/series.py:305-309``) with whole-batch array
-  sampling.
-* **Exact integer samplers** for the two-sided geometric and discrete
-  Gaussian, following the published rejection samplers of Canonne,
-  Kapralov & Steinke, "The Discrete Gaussian for Differential
-  Privacy" (arXiv:2004.00010).  The Bernoulli/rejection core is pure
-  ``fractions.Fraction`` arithmetic; the magnitude draw (r17) is the
-  certified band inversion — interval arithmetic over revealed
-  uniform bits, refined until the rounded value is determined, so the
-  output law stays exact while the draw is O(1) at any scale (the
-  prior all-Fraction Bernoulli loop was O(scale) and crashed at legal
-  budgets α≥1e7).  Used on the scalar driver path where
-  floating-point attacks matter most (cf. reference
-  ``tmlt/core/random/discrete_gaussian.py``).
+* :func:`two_sided_geometric_exact_vec` — discrete Laplace,
+  P[X=k] ∝ exp(-|k|/scale), the geometric mechanism's noise;
+* :func:`discrete_gaussian_exact_vec` — N_Z(0, sigma^2), by the
+  rejection construction of Canonne, Kapralov & Steinke, "The Discrete
+  Gaussian for Differential Privacy" (arXiv:2004.00010, Algorithm 3).
 
-* **Vectorized exact integer samplers** (certified inversion /
-  rejection, bottom of this module) — the column path for the
-  geometric and discrete-Gaussian mechanisms: whole-batch float
-  candidate + margin-widened certification, with the ~1e-15 uncertain
-  fraction finished per-value in rigorous ``mpmath.iv`` arithmetic.
-  Exactly the scalar distribution at near-NumPy throughput.
+Both are exact: a whole-batch float pass proposes each draw and
+certifies it against margin-widened enclosures, and the ~1e-15 of
+draws it cannot certify are finished per value in rigorous
+``mpmath.iv`` arithmetic by extending the SAME uniform prefix
+(:func:`_resolve_band_index`, :func:`_resolve_bernoulli_exp`), so
+every infinite-precision uniform maps to its true output.  They
+replace the reference's per-value ``Series.apply`` loops
+(``pandas_measurements/series.py:305-309``) and exact scalar samplers
+(``tmlt/core/random/discrete_gaussian.py``) at near-NumPy throughput.
+The continuous (Laplace, Gaussian) samplers live in
+:mod:`tumult_core_spark.exact_sampling`.  A single noisy value is a
+one-element batch (``_NoiseMechanism.__call__``).
 
-Continuous Laplace/Gaussian sampling here is float-based (NumPy) and
-test-only: BOTH the scalar and the vectorized column measurement
-paths draw from the floating-point-safe certified samplers in
-:mod:`tumult_core_spark.exact_sampling` (the analogue of the
-reference's MPFR/Arb samplers; see LIMITATIONS.md "Closed" — the
-column-path float weakening was closed when the dd-certified
-vectorized samplers landed).
-
-Every sampler treats ``scale == 0`` as "no noise" and returns the
-input unchanged — the deterministic mode used by correctness oracles.
+Every sampler treats ``scale == 0`` as "no noise" — the deterministic
+mode used by correctness oracles.
 
 RNG: one ``numpy.random.Generator`` per process, seeded from
 ``os.urandom`` so executor workers never share a seed.
@@ -63,39 +47,26 @@ _GENERATOR_PID: Optional[int] = None
 #: ``spark.executorEnv.TUMULT_CORE_SPARK_CSPRNG=1``.
 CSPRNG_ENV = "TUMULT_CORE_SPARK_CSPRNG"
 
-_MANTISSA_SHIFT = np.uint64(11)
-_INV_TWO53 = float(2.0**-53)
-
 
 class _UrandomGenerator:
     """``numpy.random.Generator``-compatible shim whose every 64-bit
     word comes from ``os.urandom`` (a per-draw CSPRNG, no generator
     state to infer).  Implements exactly the Generator surface the
-    samplers in this package use: ``random``, ``integers``,
-    ``normal``.  Stateless, hence trivially fork-safe.
+    samplers in this package use: ``integers``, scalar and array.
+    Every certified sampler builds its uniforms from those integer
+    words, so with :data:`CSPRNG_ENV` set each released value's noise
+    is a function of ``os.urandom`` output alone.  Stateless, hence
+    trivially fork-safe.
 
     ~20-60x slower than PCG64 per word (syscall + no buffering), which
-    is irrelevant for noise draws (one word per released value) but is
-    why this is opt-in via :data:`CSPRNG_ENV` rather than the default.
-
-    Only the WORD SOURCE matches the reference's urandom fallback.
-    ``normal()`` here is Box-Muller over 53-bit uniforms, whose
-    smallest representable ``u1`` caps |z| at ~8.57 sigma, while the
-    reference runs numpy's ziggurat over the same word stream —
-    distributionally different in that far tail.  Production noise
-    paths use the certified exact integer/rational samplers, not this
-    float ``normal()`` (test-only), so the deviation never reaches a
-    released value.
+    is irrelevant for noise draws (a few words per released value) but
+    is why this is opt-in via :data:`CSPRNG_ENV` rather than the
+    default.
     """
 
     @staticmethod
     def _words(n: int) -> np.ndarray:
         return np.frombuffer(os.urandom(8 * int(n)), dtype=np.uint64)
-
-    def random(self, size=None):
-        n = 1 if size is None else int(size)
-        u = (self._words(n) >> _MANTISSA_SHIFT).astype(np.float64) * _INV_TWO53
-        return float(u[0]) if size is None else u
 
     def integers(self, low, high=None, size=None, dtype=np.int64, endpoint=False):
         if high is None:
@@ -137,15 +108,6 @@ class _UrandomGenerator:
             res = res + np.dtype(dtype).type(low)
         return res
 
-    def normal(self, loc=0.0, scale=1.0, size=None):
-        n = 1 if size is None else int(size)
-        # Box-Muller; u1 clipped away from 0 (probability 2^-53 per draw)
-        u1 = np.clip(self.random(n), np.finfo(float).tiny, None)
-        u2 = self.random(n)
-        z = np.sqrt(-2.0 * np.log(u1)) * np.cos(2.0 * np.pi * u2)
-        z = loc + scale * z
-        return float(z[0]) if size is None else z
-
 
 _URANDOM_GENERATOR = _UrandomGenerator()
 
@@ -166,210 +128,7 @@ def rng() -> np.random.Generator:
 
 
 # ---------------------------------------------------------------------------
-# Vectorized float samplers (executor hot path)
-# ---------------------------------------------------------------------------
-
-
-def laplace(scale: float, size: int) -> np.ndarray:
-    """Inverse-CDF from one uniform batch: ~10x faster than the
-    generic generator method at 10M draws."""
-    if scale == 0:
-        return np.zeros(size)
-    u = rng().random(size) - 0.5
-    return -scale * np.sign(u) * np.log1p(-2.0 * np.abs(u))
-
-
-def gaussian(sigma_squared: float, size: int) -> np.ndarray:
-    if sigma_squared == 0:
-        return np.zeros(size)
-    return rng().normal(0.0, float(np.sqrt(sigma_squared)), size)
-
-
-def _geometric_failures(q: float, size: int, g: np.random.Generator) -> np.ndarray:
-    """Geometric number-of-failures (support {0,1,...}), P[k] = (1-q) q^k,
-    by inversion: floor(log(u) / log(q))."""
-    u = g.random(size)  # (0, 1); zero probability of exactly 0
-    np.clip(u, np.finfo(float).tiny, None, out=u)
-    return np.floor(np.log(u) / np.log(q)).astype(np.int64)
-
-
-def two_sided_geometric(scale: float, size: int) -> np.ndarray:
-    """Discrete Laplace: difference of two iid geometric(p=1-e^{-1/s}) vars.
-
-    P[X=k] ∝ e^{-|k|/scale}; integer-valued.
-    """
-    if scale == 0:
-        return np.zeros(size, dtype=np.int64)
-    q = float(np.exp(-1.0 / scale))
-    g = rng()
-    return _geometric_failures(q, size, g) - _geometric_failures(q, size, g)
-
-
-def discrete_gaussian(sigma_squared: float, size: int) -> np.ndarray:
-    """Vectorized discrete Gaussian N_Z(0, sigma^2) via rejection from
-    the discrete Laplace proposal (CKS'20, Algorithm 3), batched with
-    an empirically-tuned overdraw so most calls finish in one round."""
-    if sigma_squared == 0:
-        return np.zeros(size, dtype=np.int64)
-    sigma = float(np.sqrt(sigma_squared))
-    t = int(np.floor(sigma)) + 1
-    out = np.empty(size, dtype=np.int64)
-    filled = 0
-    g = rng()
-    overdraw = 2.2  # ~1/acceptance for small sigma; refined per round
-    while filled < size:
-        n = max(1024, int((size - filled) * overdraw))
-        y = two_sided_geometric(float(t), n)
-        # in-place acceptance computation (few temporaries)
-        z = np.abs(y).astype(np.float64)
-        z -= sigma_squared / t
-        z *= z
-        z /= -2.0 * sigma_squared
-        np.exp(z, out=z)
-        keep = y[g.random(n) < z]
-        if len(keep):
-            acc = len(keep) / n
-            overdraw = min(20.0, 1.2 / max(acc, 0.05))
-        take = min(len(keep), size - filled)
-        out[filled : filled + take] = keep[:take]
-        filled += take
-    return out
-
-
-# ---------------------------------------------------------------------------
-# Exact integer samplers (driver scalar path) — Fraction arithmetic only
-# ---------------------------------------------------------------------------
-
-
-def _randbelow(d: int) -> int:
-    """Uniform integer in [0, d) for arbitrary-precision ``d``.
-
-    NumPy's ``integers`` is capped at int64; denominators of
-    ``Fraction``-exact parameters routinely exceed that (e.g. a
-    ``Fraction(float)`` sigma^2 has denominator ~2^52, squared to
-    ~2^104 inside the discrete-Gaussian acceptance gamma).  Assemble
-    the draw from 63-bit chunks and reject values >= d.
-    """
-    bits = d.bit_length()
-    g = rng()
-    if bits <= 63:
-        return int(g.integers(0, d))
-    while True:
-        r = 0
-        remaining = bits
-        while remaining > 0:
-            take = min(remaining, 63)
-            r = (r << take) | int(g.integers(0, 1 << take))
-            remaining -= take
-        if r < d:
-            return r
-
-
-def _bernoulli(p: Fraction) -> bool:
-    """Exact Bernoulli(p) using rejection-free integer comparison."""
-    # explicit raise, not `assert`: this is the exact-Bernoulli
-    # primitive of the DP samplers, and under `python -O` a stripped
-    # assert would let p > 1 silently degenerate to Bernoulli(1) (r17)
-    if not 0 <= p <= 1:
-        raise ValueError(f"Bernoulli probability must be in [0, 1], got {p}")
-    # draw a uniform integer in [0, denominator) and compare to numerator
-    return _randbelow(p.denominator) < p.numerator
-
-
-def _bernoulli_exp_frac(gamma: Fraction) -> bool:
-    """Exact Bernoulli(exp(-gamma)) for 0 <= gamma <= 1 (CKS'20 Alg. 1)."""
-    k = 1
-    while True:
-        if not _bernoulli(gamma / k):
-            return k % 2 == 1
-        k += 1
-
-
-def bernoulli_exp(gamma: Fraction) -> bool:
-    """Exact Bernoulli(exp(-gamma)) for any gamma >= 0."""
-    if gamma < 0:
-        raise ValueError("gamma must be >= 0")
-    while gamma > 1:
-        if not _bernoulli_exp_frac(Fraction(1)):
-            return False
-        gamma -= 1
-    return _bernoulli_exp_frac(gamma)
-
-
-def _one_sided_geometric_exact(scale: Fraction) -> int:
-    """Exact geometric number-of-failures, P[X=k] = (1-q) q^k with
-    q = exp(-1/scale), by certified band inversion (the scalar form of
-    :func:`_geometric_failures_exact_vec`): reveal a 53-bit uniform
-    prefix and resolve its band exactly in interval arithmetic.
-
-    O(1) expected draws for ANY scale.  This replaces the r1-r16
-    Bernoulli(exp(-1/scale)) success-counting loop, which cost
-    O(scale) Bernoulli trials per sample (5.7 s/draw measured at scale
-    2e5) and tripped its 1e7 magnitude safety cap with probability
-    exp(-1e7/scale) — a ~37%-per-draw RuntimeError at scale 1e7, i.e.
-    at the legal budget epsilon = d_in * 1e-7 (r17 samplers review)."""
-    g = rng()
-    m = int(g.integers(0, 1 << _PREFIX_BITS))
-    return _resolve_band_index(m, _PREFIX_BITS, scale)
-
-
-def geometric_exact(scale: Union[int, Fraction]) -> int:
-    """Exact two-sided geometric with P[X=k] ∝ exp(-|k|/scale).
-
-    Magnitude by certified band inversion (exact for every
-    infinite-precision uniform; see :func:`_one_sided_geometric_exact`),
-    then a fair sign with the duplicate zero rejected — the same
-    magnitude/sign construction as before, with an O(1) magnitude draw.
-    """
-    scale = Fraction(scale)
-    if scale == 0:
-        return 0
-    if scale < 0:
-        raise ValueError("scale must be >= 0")
-    while True:
-        magnitude = _one_sided_geometric_exact(scale)
-        sign_positive = _bernoulli(Fraction(1, 2))
-        if magnitude == 0 and not sign_positive:
-            continue  # reject duplicate zero so zero isn't double-weighted
-        return magnitude if sign_positive else -magnitude
-
-
-def discrete_gaussian_exact(sigma_squared: Union[int, Fraction]) -> int:
-    """Exact discrete Gaussian N_Z(0, sigma^2) (CKS'20 Algorithm 3)."""
-    s2 = Fraction(sigma_squared)
-    if s2 == 0:
-        return 0
-    if s2 < 0:
-        raise ValueError("sigma_squared must be >= 0")
-    # t = floor(sigma) + 1 computed exactly via integer sqrt of floor(s2)
-    import math
-
-    t = math.isqrt(int(s2)) + 1
-    while True:
-        y = _discrete_laplace_exact(Fraction(t))
-        gamma = (abs(y) - s2 / t) ** 2 / (2 * s2)
-        if bernoulli_exp(gamma):
-            return y
-
-
-def _discrete_laplace_exact(scale: Fraction) -> int:
-    """Exact discrete Laplace over Z with P[Y=y] ∝ exp(-|y|/scale).
-
-    Magnitude by certified band inversion — O(1) expected for any
-    scale, where the previous Bernoulli success-counting loop cost
-    O(scale) trials per proposal (the discrete-Gaussian proposal scale
-    is t = floor(sigma) + 1, so large sigma^2 made every proposal a
-    multi-second loop; r17 samplers review)."""
-    while True:
-        magnitude = _one_sided_geometric_exact(scale)
-        positive = _bernoulli(Fraction(1, 2))
-        if magnitude == 0 and not positive:
-            continue
-        return magnitude if positive else -magnitude
-
-
-# ---------------------------------------------------------------------------
-# Vectorized EXACT integer samplers (executor column path)
+# Certified integer samplers
 # ---------------------------------------------------------------------------
 #
 # Certified inversion: each draw starts as a 53-bit uniform prefix
@@ -481,8 +240,7 @@ def two_sided_geometric_exact_vec(
     scale: Union[int, Fraction], size: int
 ) -> np.ndarray:
     """Exact vectorized discrete Laplace, P[X=k] ∝ exp(-|k|/scale), as
-    the difference of two iid exact geometric number-of-failures (the
-    same identity as the float path, with certified sampling)."""
+    the difference of two iid exact geometric number-of-failures."""
     scale = Fraction(scale)
     if scale == 0:
         return np.zeros(size, dtype=np.int64)

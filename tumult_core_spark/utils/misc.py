@@ -22,6 +22,7 @@ import uuid
 from contextlib import contextmanager
 from typing import Iterator, Optional
 
+from py4j.protocol import Py4JError
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -160,7 +161,7 @@ def free_local_checkpoint(df: DataFrame) -> None:
     """
     try:
         df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # pragma: no cover - best-effort cleanup
+    except Py4JError:  # pragma: no cover - best-effort cleanup
         pass
 
 
@@ -395,23 +396,26 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     through here.
 
     Falls back to the classic ``createDataFrame`` for values the Arrow
-    bridge cannot represent; the result is identical either way (the
-    relation is the same multiset of rows).
+    bridge cannot represent (``ArrowTypeError`` / ``ArrowInvalid``,
+    e.g. an ``int`` key in a string column, which the classic path
+    casts); the result is identical either way (the relation is the
+    same multiset of rows).  Any other error propagates.
     """
-    rows = list(rows)
-    try:
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-        arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    arrow_schema = to_arrow_schema(schema)
+    try:
         arrays = [
             pa.array([row[i] for row in rows], type=arrow_schema.field(i).type)
             for i in range(len(arrow_schema))
         ]
+    except (pa.ArrowTypeError, pa.ArrowInvalid):
+        df = spark.createDataFrame(rows, schema=schema)
+    else:
         tbl = pa.Table.from_arrays(arrays, schema=arrow_schema)
         df = spark.createDataFrame(tbl, schema=schema)
-    except Exception:  # exotic types: keep the classic path
-        df = spark.createDataFrame(rows, schema=schema)
     n_part = max(1, -(-len(rows) // _LOCAL_ROWS_PER_PARTITION))
     default_par = spark.sparkContext.defaultParallelism
     return df.coalesce(min(n_part, default_par))
