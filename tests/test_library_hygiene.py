@@ -4,6 +4,9 @@
   ``except BaseException`` or bare ``except`` in ``tumult_core_spark``
   must re-raise somewhere in its body.  A handler that swallows every
   error turns bugs into silent fallbacks.
+* No measurement builds its own release frame: ``createDataFrame``
+  and Arrow ``sort_by`` stay out of ``measurements/``, so every small
+  release leaves through ``misc.freeze_small``.
 * The narrowed handlers still do their job: ``local_rows_df`` falls
   back to the classic ``createDataFrame`` only for values the Arrow
   bridge cannot represent, and lets every other error through.
@@ -65,3 +68,21 @@ def test_local_rows_df_propagates_unrelated_errors(spark, monkeypatch):
     monkeypatch.setattr(pa, "array", broken_array)
     with pytest.raises(RuntimeError, match="not an Arrow conversion error"):
         local_rows_df(spark, [("a", 1)], _KEYS)
+
+
+def test_measurements_build_no_frames_of_their_own():
+    """Every small release under ``measurements/`` freezes through
+    ``misc.freeze_small``: no measurement builds a DataFrame with
+    ``createDataFrame`` or orders an Arrow table with ``sort_by``."""
+    root = Path(tumult_core_spark.__file__).parent / "measurements"
+    offenders = []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("createDataFrame", "sort_by")
+            ):
+                offenders.append(f"{path.name}:{node.lineno} {node.func.attr}")
+    assert not offenders, "measurements bypassing freeze_small: " + ", ".join(offenders)

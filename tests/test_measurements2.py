@@ -1385,18 +1385,32 @@ class TestFreezeBranchContracts:
         Before the bound was declared, every release counted the
         deduplicated one-row key relation (two jobs under AQE: the
         dedup shuffle and the count) and then ran the observed-size
-        freeze probe — 7 jobs per release against 5 now."""
+        freeze probe — 7 jobs per release.  The small release now
+        collects without a rand-keyed shuffle, so 4 jobs remain.  A
+        grouped quantile over a public key list keeps the same
+        budget."""
         df = spark.createDataFrame(
-            [(float(i % 10),) for i in range(100)], "x double"
+            [("ab"[i % 2], float(i % 10)) for i in range(100)],
+            "g string, x double",
         )
         dom = SparkDataFrameDomain.from_spark_schema(df.schema)
-        m = create_quantile_measurement(
+        ungrouped = create_quantile_measurement(
             dom, SymmetricDifference(), PureDP(), 1, 1, "x", 0.5, 0.0, 10.0
         )
+        gb = create_groupby_from_list_of_keys(
+            dom, SymmetricDifference(), False, ["g"], [("a",), ("b",), ("c",)]
+        )
+        grouped = create_quantile_measurement(
+            dom, SymmetricDifference(), PureDP(), 1, 1, "x", 0.5, 0.0, 10.0,
+            groupby_transformation=gb,
+        )
         for _ in range(2):
-            value, jobs = self._jobs_in(spark, lambda: m(df))
+            value, jobs = self._jobs_in(spark, lambda: ungrouped(df))
             assert 0.0 <= value <= 10.0
-            assert jobs <= 5, jobs
+            assert jobs <= 4, jobs
+            out, jobs = self._jobs_in(spark, lambda: grouped(df))
+            assert jobs <= 4, jobs
+            assert out.count() == 3
 
     def test_internal_persists_are_released(self, spark, monkeypatch):
         """Partition selection's large path and SVT's distributed path

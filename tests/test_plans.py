@@ -134,10 +134,12 @@ def test_hash_sample_no_shuffle(spark, sf_dir):
 
 
 def test_sanitize_rebalances_to_data_size(spark):
-    """sanitize_df shuffles on rand() via REBALANCE: the privacy shuffle
-    is still a full exchange keyed on the random column, but AQE sizes
-    the partition count to the released data — a small aggregate release
-    materializes as one file, not `shuffle.partitions` near-empty ones."""
+    """sanitize_df's large (parquet) branch shuffles on rand() via
+    REBALANCE: the privacy shuffle is still a full exchange keyed on the
+    random column, but AQE sizes the partition count to the released
+    data — a 3k-row release materializes as one file, not
+    `shuffle.partitions` near-empty ones.  Below the small-release
+    bound the same rows freeze as a JVM local relation instead."""
     from tumult_core_spark.utils.misc import _shuffle_for_release, sanitize_df
 
     df = spark.range(3000).select(
@@ -311,6 +313,104 @@ def test_sanitize_survives_reserved_column_name(spark):
     assert out.agg(F.sum("v")).collect()[0][0] == 2 * sum(range(10))
 
 
+@pytest.mark.parametrize("coalesce", ["true", "false"])
+def test_small_release_order_is_canonical(spark, coalesce):
+    """A small release's row order is a function of the released values
+    alone: the same rows from a 3-partition and a 1-partition input
+    come back in the same order, array and map columns included (Arrow
+    cannot sort them, so they sort on a value-derived key).  Pinned with AQE
+    partition coalescing on and off: with it off, a rand()-keyed
+    shuffle would spread the rows over several partitions in a random
+    order."""
+    from tumult_core_spark.utils.misc import sanitize_df
+
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, coalesce)
+    try:
+        df = spark.createDataFrame(
+            [(i % 3, [i % 5, -i], {"k": i % 2}, float(i)) for i in range(40)],
+            "g int, a array<int>, m map<string,int>, v double",
+        )
+        spread = sanitize_df(df.repartition(3), known_rows=40).collect()
+        single = sanitize_df(df.coalesce(1), known_rows=40).collect()
+    finally:
+        spark.conf.set(conf, old)
+    assert spread == single
+    assert sorted((r.g, tuple(r.a), r.m["k"], r.v) for r in spread) == sorted(
+        (i % 3, (i % 5, -i), i % 2, float(i)) for i in range(40)
+    )
+
+
+def test_small_releases_collect_without_rand_shuffle(spark, monkeypatch):
+    """The relation a small release collects carries no rand()-keyed
+    REBALANCE: a plain sanitize_df release and a grouped quantile
+    release are collected as they are and ordered on the driver.  Only
+    the large (parquet) branch still shuffles on rand()."""
+    import tumult_core_spark.utils.misc as misc
+    from tumult_core_spark.measurements.quantile import (
+        create_quantile_measurement,
+    )
+    from tumult_core_spark.measures import PureDP
+    from tumult_core_spark.transformations.groupby import (
+        create_groupby_from_list_of_keys,
+    )
+
+    collected = []
+    real = misc._collect_bounded
+
+    def record(df, bound, *args):
+        collected.append(plan_of(df))
+        return real(df, bound, *args)
+
+    monkeypatch.setattr(misc, "_collect_bounded", record)
+    df = spark.range(60).select(
+        (F.col("id") % 3).alias("g"), (F.col("id") % 10).cast("double").alias("x")
+    )
+    misc.sanitize_df(df, known_rows=60)
+    dom = SparkDataFrameDomain.from_spark_schema(df.schema)
+    gb = create_groupby_from_list_of_keys(
+        dom, SymmetricDifference(), False, ["g"], [(0,), (1,), (2,)]
+    )
+    quantile = create_quantile_measurement(
+        dom, SymmetricDifference(), PureDP(), 1, 1, "x", 0.5, 0.0, 10.0,
+        groupby_transformation=gb,
+    )
+    quantile(df)
+    assert len(collected) == 2
+    for plan in collected:
+        assert "rand(" not in plan and "REBALANCE" not in plan, plan
+    assert "REBALANCE" in plan_of(misc._shuffle_for_release(df))
+
+
+def test_add_noise_rejects_null_in_noise_column(spark):
+    """A null reaching a noise column raises before any draw instead of
+    rerouting the release; the 0-filled factories never produce one."""
+    from tumult_core_spark.domains import (
+        SparkIntegerColumnDescriptor,
+        SparkStringColumnDescriptor,
+    )
+    from tumult_core_spark.measurements.noise import (
+        AddGeometricNoise,
+        AddNoiseToSeries,
+    )
+    from tumult_core_spark.measurements.spark import AddNoiseToColumn
+
+    dom = SparkDataFrameDomain(
+        {
+            "g": SparkStringColumnDescriptor(),
+            "count": SparkIntegerColumnDescriptor(size=64, allow_null=True),
+        }
+    )
+    m = AddNoiseToColumn(
+        dom, AddNoiseToSeries(AddGeometricNoise(1)), "count",
+        known_release_rows=2,
+    )
+    df = spark.createDataFrame([("a", 3), ("b", None)], "g string, count long")
+    with pytest.raises(ValueError, match="null"):
+        m(df)
+
+
 def test_new_text_ops_stay_jvm_side(spark, sf_dir):
     """tfidf / unigram-LM / chunking / repetition are pure Catalyst:
     no Python evaluation nodes anywhere in their physical plans, and
@@ -385,18 +485,14 @@ def test_fused_moments_single_scan_single_exchange(spark, sf_dir, monkeypatch):
     (sod, sos, count) relation, and the 4-row public-keys join
     broadcasts.  sanitize_df is patched to pass-through so the
     pre-materialize plan is inspectable.  The driver-side release
-    freeze (freeze_noised_release, r18) would otherwise collapse the
-    whole plan to a LocalTableScan before it can be inspected — force
-    the executor path for this plan-shape gate."""
+    freeze (freeze_noised_release) would otherwise collapse the whole
+    plan to a LocalTableScan before it can be inspected — shrinking
+    the small-release bound forces the executor path for this
+    plan-shape gate."""
     import tumult_core_spark.utils.misc as misc
 
-    monkeypatch.setattr(
-        misc, "sanitize_df",
-        lambda df, materialize_output=True, known_rows=None: df,
-    )
-    monkeypatch.setattr(
-        misc, "freeze_noised_release", lambda df, specs, known_rows: None
-    )
+    monkeypatch.setattr(misc, "sanitize_df", lambda df, known_rows: df)
+    monkeypatch.setattr(misc, "SMALL_RELEASE_ROWS", 0)
     import __spark_entry__ as E
 
     out = E.queries()["fused_moments"](spark, sf_dir)
@@ -873,12 +969,11 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
     """r18: grouped releases with a public-key row bound draw noise
     DRIVER-side over the frozen pre-noise aggregate
     (utils.misc.freeze_noised_release) — zero ArrowEvalPython stages,
-    zero REBALANCE exchanges, same mechanism invoked once.  Gates:
-    (a) scale-0 outputs identical to the executor pandas-UDF path,
-    same schema; (b) the frozen plan is a LocalTableScan; (c) a
-    release exceeding the declared bound still raises; (d) ineligible
-    inputs (bound over SMALL_RELEASE_ROWS) fall back to the
-    executor path BEFORE any draw."""
+    zero exchanges, same mechanism invoked once.  Gates: (a) scale-0
+    outputs identical to the executor pandas-UDF path that a bound
+    over SMALL_RELEASE_ROWS takes, same column types; (b) the frozen
+    plan is a LocalTableScan; (c) a release exceeding the declared
+    bound still raises."""
     import tumult_core_spark.utils.misc as misc
     from tumult_core_spark.measures import PureDP
     from tumult_core_spark.measurements.aggregations import (
@@ -902,15 +997,15 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
     assert "LocalTableScan" in plan_of(driver_out)
     driver_rows = sorted(driver_out.collect())
 
-    # identical executor-path run (freeze disabled): same rows, schema
+    # identical executor-path run (4 keys over the shrunk small-release
+    # bound): same rows and column types
     import unittest.mock as mock
 
-    with mock.patch.object(
-        misc, "freeze_noised_release", lambda df, specs, known_rows: None
-    ):
+    with mock.patch.object(misc, "SMALL_RELEASE_ROWS", 3):
         exec_out = m(lineitem)
+    assert "LocalTableScan" not in plan_of(exec_out)
     assert sorted(exec_out.collect()) == driver_rows
-    assert exec_out.schema == driver_out.schema
+    assert exec_out.dtypes == driver_out.dtypes
 
     # float sum keeps the double release type on both paths
     gb2 = create_groupby_from_list_of_keys(
@@ -939,16 +1034,6 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
     )
     with pytest.raises(AssertionError, match="known_rows"):
         bad(counted)
-
-    # a bound above SMALL_RELEASE_ROWS is ineligible: freeze must bail
-    # (and the executor path then routes through sanitize_df's large
-    # branch) — checked directly on the helper, pre-draw
-    assert (
-        misc.freeze_noised_release(
-            counted, [("count", None, "long")], misc.SMALL_RELEASE_ROWS + 1
-        )
-        is None
-    )
 
 
 def test_svt_driver_release_matches_distributed_path(spark):

@@ -669,8 +669,8 @@ def create_bounds_measurement(
     from ..utils.misc import local_rows_df
     from pyspark.sql import types as _T
 
-    # JVM-local single-partition grid: the classic createDataFrame(list)
-    # path costs one Python task per core per evaluation of the rank
+    # JVM-local single-partition grid: a parallelized Python row list
+    # costs one Python task per core per evaluation of the rank
     # relation (utils.misc.local_rows_df), and this grid is evaluated
     # by the 0-fill join, the SVT persist, and the release freeze
     rank_keys = local_rows_df(
@@ -895,7 +895,7 @@ class FusedMomentsMeasurement(Measurement):
         return exprs
 
     def __call__(self, data: DataFrame):
-        from ..utils.misc import sanitize_df
+        from ..utils import misc
 
         exprs = self._agg_exprs()
         if self.groupby is not None:
@@ -925,16 +925,14 @@ class FusedMomentsMeasurement(Measurement):
                     continue
                 specs.append((s, series_mech, mech.release_type))
             known_rows = gdf.n_keys
-            # public-key-bounded release: draw all three statistics'
-            # noise driver-side over the frozen pre-noise aggregate —
-            # one job, no ArrowEvalPython stages, no REBALANCE (see
-            # utils.misc.freeze_noised_release); large key sets keep
-            # the executor pandas-UDF path below
-            from ..utils.misc import freeze_noised_release
-
-            frozen = freeze_noised_release(joined, specs, known_rows)
-            if frozen is not None:
-                return self.postprocess(frozen)
+            # small public-key bound: draw all three statistics' noise
+            # driver-side over the pre-noise aggregate — one job, no
+            # ArrowEvalPython stages (utils.misc.freeze_noised_release);
+            # large key sets take the executor pandas-UDF path below
+            if known_rows <= misc.SMALL_RELEASE_ROWS:
+                return self.postprocess(
+                    misc.freeze_noised_release(joined, specs, known_rows)
+                )
             noisy = joined
             for s, series_mech, out_type in specs:
                 udf = F.pandas_udf(
@@ -942,7 +940,7 @@ class FusedMomentsMeasurement(Measurement):
                 ).asNondeterministic()
                 noisy = noisy.withColumn(s, udf(F.col(s)))
             return self.postprocess(
-                sanitize_df(noisy, known_rows=known_rows)
+                misc.sanitize_df(noisy, known_rows=known_rows)
             )
         row = data.agg(*exprs).first()
         stats = {}

@@ -7,12 +7,13 @@ The privacy-critical physical details (reference
   row bound the measurement knows before any draw: the public-key
   count for grouped releases, the input's group count for SVT, the
   pre-noise candidate count for partition selection.  Small releases
-  draw their noise driver-side over one bounded collect of the
-  pre-noise relation (``utils/misc.freeze_noised_release``) or pass
-  through ``utils/misc.sanitize_df`` (rand-keyed shuffle and sort
-  within partitions, then one Arrow collect); large ones take
-  ``sanitize_df``'s single parquet write.  No branch observes the size
-  of a noised relation;
+  leave through ``utils/misc.freeze_small`` (a canonical sort of the
+  collected release and a local relation), either after a driver-side
+  draw over one bounded collect of the pre-noise relation
+  (``freeze_noised_release``, partition selection, SVT) or from
+  ``sanitize_df``'s small branch.  Large ones take ``sanitize_df``'s
+  ``rand()``-keyed shuffle and single parquet write.  No branch
+  observes the size of a noised relation;
 * noise UDFs are marked ``asNondeterministic()`` so Catalyst never
   re-executes, reorders, or pushes them down.
 """
@@ -41,6 +42,7 @@ from ..metrics import (
     SymmetricDifference,
 )
 from ..utils.distributions import double_sided_geometric_cmf_exact
+from ..utils import misc
 from ..utils.grouped_dataframe import GroupedDataFrame
 from ..utils.misc import persisted, sanitize_df
 from .noise import AddNoiseToSeries
@@ -128,27 +130,20 @@ class AddNoiseToColumn(SparkMeasurement):
         return self.measurement.privacy_function(d_in)
 
     def __call__(self, data: DataFrame) -> DataFrame:
-        """Grouped releases with a public-key row bound draw their
-        noise DRIVER-side over the frozen pre-noise aggregate
-        (:func:`~..utils.misc.freeze_noised_release`): one Spark job,
-        no ArrowEvalPython stage, no REBALANCE exchange — the same
-        single-invocation pattern :class:`GeometricPartitionSelection`
-        ships.  Key sets above the small-release threshold keep the
-        executor pandas-UDF path."""
-        from ..utils.misc import freeze_noised_release
-
+        """The public row bound picks the path before anything runs.
+        At most ``SMALL_RELEASE_ROWS`` rows: the noise is drawn
+        DRIVER-side over the collected pre-noise aggregate
+        (:func:`~..utils.misc.freeze_noised_release`) — one Spark job,
+        no ArrowEvalPython stage, no exchange.  Larger key sets noise
+        on the executors in a pandas UDF and freeze through
+        ``sanitize_df``'s parquet branch."""
+        rows = self.known_release_rows
+        if rows > misc.SMALL_RELEASE_ROWS:
+            return sanitize_df(self.call_unsanitized(data), known_rows=rows)
         inner = self.measurement
         fn = None if inner.adds_no_noise else inner
-        frozen = freeze_noised_release(
-            data,
-            [(self.measure_column, fn, inner.noise_mechanism.release_type)],
-            self.known_release_rows,
-        )
-        if frozen is not None:
-            return frozen
-        return sanitize_df(
-            self.call_unsanitized(data), known_rows=self.known_release_rows
-        )
+        spec = (self.measure_column, fn, inner.noise_mechanism.release_type)
+        return misc.freeze_noised_release(data, [spec], rows)
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         inner = self.measurement
@@ -309,14 +304,10 @@ class GeometricPartitionSelection(SparkMeasurement):
         ``known_rows`` = the exact candidate count (> the small
         threshold by construction, still noise-independent).
         """
-        from ..utils import misc as _misc
-
         counts = self._pre_noise_counts(data)
-        head = counts.limit(_misc.SMALL_RELEASE_ROWS + 1).toArrow()
-        if head.num_rows <= _misc.SMALL_RELEASE_ROWS:
-            return self._release_from_candidates(
-                data.sparkSession, head, counts.schema
-            )
+        head = counts.limit(misc.SMALL_RELEASE_ROWS + 1).toArrow()
+        if head.num_rows <= misc.SMALL_RELEASE_ROWS:
+            return self._release_from_candidates(head, counts.schema)
         # Rare huge-candidate-set path: re-aggregate once into a
         # persisted relation (the raw input pays one more scan total),
         # draw noise on executors, freeze as one parquet write.
@@ -325,13 +316,11 @@ class GeometricPartitionSelection(SparkMeasurement):
                 self._noise_and_filter(counts), known_rows=counts.count()
             )
 
-    def _release_from_candidates(self, spark, head, schema) -> DataFrame:
+    def _release_from_candidates(self, head, schema) -> DataFrame:
         """Driver-side noise + threshold over the frozen candidate
         Arrow table: the same mechanism object the executor path wraps
         in a pandas UDF, applied once to <= SMALL_RELEASE_ROWS counts.
-        Row order is the canonical all-columns sort — a function of the
-        released values only, so it cannot leak input order — and the
-        result embeds as an immutable JVM ``LocalTableScan`` exactly
+        The survivors freeze through :func:`~..utils.misc.freeze_small`
         like every other small release.
 
         The GROUP columns never round-trip through pandas: a nullable
@@ -353,8 +342,19 @@ class GeometricPartitionSelection(SparkMeasurement):
             idx, head.schema.field(idx), pa.array(counts, pa.int64())
         )
         tbl = tbl.filter(pa.array(counts >= self.threshold))
-        tbl = tbl.sort_by([(c, "ascending") for c in tbl.column_names])
-        return spark.createDataFrame(tbl, schema=schema)
+        return misc.freeze_small(tbl, schema)
+
+
+#: Spark simpleString types SVT's driver release accepts.  Its group
+#: keys round-trip through pandas (``groupby`` and ``duplicated``),
+#: where struct, list and map keys are unhashable; the release's null
+#: check keeps int64 keys from being coerced to float64 there.
+_DRIVER_RELEASE_TYPES = frozenset(
+    {
+        "tinyint", "smallint", "int", "bigint", "float", "double",
+        "string", "boolean", "date", "timestamp", "timestamp_ntz",
+    }
+)
 
 
 class SparseVectorPrefixSums(SparkMeasurement):
@@ -453,23 +453,15 @@ class SparseVectorPrefixSums(SparkMeasurement):
 
         Returns ``None`` (fall back to the distributed path, BEFORE
         any draw) when: no bound / bound over the gate, a column type
-        outside the Arrow driver-release set, nulls in any used
+        outside :data:`_DRIVER_RELEASE_TYPES`, nulls in any used
         column, or duplicate (group, rank) pairs.  The bound and every
         bail-out condition are functions of the public grid or of the
         pre-noise data alone, never of a draw, so the branch adds no
-        observation and each mechanism still runs exactly once.  Row
-        order is the canonical all-columns sort of the released values
-        and the result embeds as an immutable ``LocalTableScan`` — the
-        same freeze contract as ``sanitize_df``'s small branch.
+        observation and each mechanism still runs exactly once.  The
+        release freezes through :func:`~..utils.misc.freeze_small`.
         """
-        from ..utils.misc import (
-            SMALL_RELEASE_ROWS,
-            _DRIVER_RELEASE_TYPES,
-            _collect_bounded,
-        )
-
         bound = self.known_input_rows
-        if bound is None or bound > SMALL_RELEASE_ROWS:
+        if bound is None or bound > misc.SMALL_RELEASE_ROWS:
             return None
         gcols = self.grouping_columns
         rank, cnt = self.rank_column, self.count_column
@@ -484,7 +476,7 @@ class SparseVectorPrefixSums(SparkMeasurement):
 
         from .noise import AddGeometricNoise
 
-        head = _collect_bounded(narrow, bound, "known_input_rows")
+        head = misc._collect_bounded(narrow, bound, "known_input_rows")
         if any(head.column(c).null_count for c in used):
             return None
         pdf = head.to_pandas()
@@ -544,8 +536,7 @@ class SparseVectorPrefixSums(SparkMeasurement):
                 )
         arrays.append(pa.array(picked, type=head.schema.field(rank).type))
         tbl = pa.table(arrays, names=[*gcols, rank])
-        tbl = tbl.sort_by([(c, "ascending") for c in tbl.column_names])
-        return data.sparkSession.createDataFrame(tbl, schema=out_schema)
+        return misc.freeze_small(tbl, out_schema)
 
     def __call__(self, data: DataFrame) -> DataFrame:
         """Sanitized release with the input persisted for the call.

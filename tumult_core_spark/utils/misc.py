@@ -6,10 +6,13 @@ reference performs via a ``saveAsTable`` round-trip
 ``utils/misc.py:88-105``): destroy row-order / partitioning side
 channels and **freeze the sampled noise** so Spark retries or lazy
 re-evaluation can never re-sample it.  The caller's a-priori row
-bound picks the freeze: a bounded Arrow collect embedded as a local
-relation for small releases, a parquet write + read-back (identical
-on a real cluster with shared storage and in local mode) for large
-ones.
+bound picks the freeze.  Every small release — ``sanitize_df``'s
+small branch, ``freeze_noised_release`` and the driver-side releases
+in ``measurements.spark`` — leaves through :func:`freeze_small`: a
+bounded Arrow collect, a canonical driver sort and a local relation.
+Large releases take a ``rand()``-keyed shuffle and a parquet write +
+read-back (identical on a real cluster with shared storage and in
+local mode).
 """
 
 from __future__ import annotations
@@ -223,8 +226,46 @@ def _collect_bounded(df: DataFrame, bound: int, bound_name: str = "known_rows"):
     return head
 
 
+def freeze_small(table, schema) -> DataFrame:
+    """Freeze a driver-held release ``table`` (a ``pa.Table`` of at most
+    :data:`SMALL_RELEASE_ROWS` rows) as a DataFrame of Spark ``schema``.
+
+    Rows are put in the canonical order first: an ascending sort on
+    every column, left to right.  That order is a function of the
+    released values alone, so it carries no trace of the input's row
+    order or partitioning; rows that tie on every column are identical,
+    so their relative order shows nothing either.  This is the same
+    guarantee the reference gets from a ``rand()``-keyed repartition and
+    ``sortWithinPartitions`` (``_get_sanitized_df``), without the
+    exchange.  Arrow cannot sort nested columns (``list``, ``map``,
+    ``struct`` with a list field), so a nested column sorts on the
+    ``repr`` of each value instead: still a function of the value
+    alone.
+
+    The sorted table embeds as an immutable JVM ``LocalTableScan``: no
+    Python-RDD scan (re-reads cost ~10 ms), it broadcasts for free in
+    downstream joins, a re-read can never re-sample the noise, and the
+    Arrow path round-trips nulls, NaN, dates, decimals and nested types
+    exactly.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    def sort_key(col):
+        if pa.types.is_nested(col.type):
+            return pa.array([repr(v) for v in col.to_pylist()], pa.string())
+        return col
+
+    # positional names: release columns may repeat or clash with any name
+    names = [str(i) for i in range(table.num_columns)]
+    keys = pa.table([sort_key(c) for c in table.columns], names=names)
+    order = pc.sort_indices(keys, sort_keys=[(n, "ascending") for n in names])
+    return SparkSession.active().createDataFrame(table.take(order), schema=schema)
+
+
 def sanitize_df(df: DataFrame, known_rows: int) -> DataFrame:
-    """Randomize partitioning and row order, then freeze the result.
+    """Strip row-order and partitioning side channels from a release,
+    then freeze it.
 
     ``known_rows`` is the release's a-priori row bound: a function of
     the public keys (grouped releases: at most one row per declared
@@ -235,26 +276,22 @@ def sanitize_df(df: DataFrame, known_rows: int) -> DataFrame:
     branch has exactly ONE release point, on any cluster:
 
     * ``known_rows <= SMALL_RELEASE_ROWS`` (the group-keys-sized common
-      case): one bounded Arrow collect IS the frozen result —
-      ``createDataFrame(pa.Table)`` embeds it as an immutable JVM
-      ``LocalTableScan`` (NOT a Python-RDD scan: re-reads cost ~10 ms,
-      the relation broadcasts for free in downstream joins, and the
-      Arrow path round-trips nulls/NaN/date/decimal/nested types
-      exactly — all pinned by tests).  A release with more rows than
-      the bound raises ``AssertionError`` (a caller bug).
-    * larger bounds: ONE self-contained parquet write job
-      (:func:`materialize`) whose files define the frozen release — no
-      cache or multi-job dependency that a lost executor could
-      invalidate.
+      case): one bounded Arrow collect, put in canonical order and
+      embedded as a local relation by :func:`freeze_small`.  A release
+      with more rows than the bound raises ``AssertionError`` (a caller
+      bug).
+    * larger bounds: a ``rand()``-keyed shuffle and a sort within
+      partitions (:func:`_shuffle_for_release`), then ONE
+      self-contained parquet write job (:func:`materialize`) whose
+      files define the frozen release — no cache or multi-job
+      dependency that a lost executor could invalidate.
 
     The bound is an UPPER bound: fewer actual rows are fine (a
     caller-supplied key list may repeat keys that GroupBy dedups).
     """
-    shuffled = _shuffle_for_release(df)
     if known_rows <= SMALL_RELEASE_ROWS:
-        head = _collect_bounded(shuffled, known_rows)
-        return df.sparkSession.createDataFrame(head, schema=shuffled.schema)
-    return materialize(shuffled)
+        return freeze_small(_collect_bounded(df, known_rows), df.schema)
+    return materialize(_shuffle_for_release(df))
 
 
 @contextmanager
@@ -283,93 +320,55 @@ def coerce_lit(value, data_type):
     return F.lit(value).cast(data_type)
 
 
-#: Spark simpleString type names sortable/collectable through the Arrow
-#: driver-release path below (primitive, pa.Table.sort_by-supported).
-_DRIVER_RELEASE_TYPES = frozenset(
-    {
-        "tinyint", "smallint", "int", "bigint", "float", "double",
-        "string", "boolean", "date", "timestamp", "timestamp_ntz",
-    }
-)
-
-
 def freeze_noised_release(df, noise_specs, known_rows):
     """Freeze a small grouped noisy release with DRIVER-side noise.
 
     ``df`` is the PRE-noise release relation (e.g. the 0-filled grouped
     aggregate), ``known_rows`` the caller's a-priori public-key row
-    bound, and ``noise_specs`` an ordered list of
+    bound and ``noise_specs`` an ordered list of
     ``(column, series_fn, out_type)`` — ``series_fn`` a
     ``pd.Series -> pd.Series`` mechanism (:class:`AddNoiseToSeries`)
     or ``None`` for a pure cast, ``out_type`` ``"long"`` / ``"double"``.
+    Callers take this branch when ``known_rows <= SMALL_RELEASE_ROWS``,
+    a decision made from the public bound alone.
 
-    Returns the frozen release, or **None when ineligible** (caller
-    falls back to the executor pandas-UDF path + :func:`sanitize_df`):
-    bound over :data:`SMALL_RELEASE_ROWS`, a non-primitive
-    column type, or nulls in a noise column.  Every ineligibility check
-    runs BEFORE any mechanism invocation, so bailing out never discards
-    a draw and the executor fallback is still the mechanism's single
-    invocation.
+    A null in a spec column raises ``ValueError`` before any draw: the
+    mechanism would see it as NaN, and a pure cast would turn it into
+    NaN.  The 0-filled factory releases never hold one.
 
-    Why: the executor path runs one ``ArrowEvalPython`` stage plus a
-    ``REBALANCE`` exchange per release just to noise a public-key-sized
-    relation (dozens-to-thousands of rows) — each a full Python-runner
-    round trip.  For a release whose row bound is a public constant,
-    the same mechanism applied ONCE driver-side to the collected
+    Why: the executor path runs one ``ArrowEvalPython`` stage plus an
+    exchange per release just to noise a public-key-sized relation
+    (dozens-to-thousands of rows) — each a full Python-runner round
+    trip.  The same mechanism applied ONCE driver-side to the collected
     pre-noise Arrow table is the identical distribution with zero
-    Python stages and zero extra exchanges; this is exactly the
-    pattern :class:`GeometricPartitionSelection` has shipped since r14
-    (``_release_from_candidates``).  The accounting is unchanged: the
-    branch is chosen from ``known_rows`` (noise-independent), nothing
-    observed here depends on a draw, and each mechanism is invoked
-    exactly once.  Row order is the canonical all-columns sort of the
-    RELEASED values — a function of the release alone, so it carries
-    no input-order side channel — and the result embeds as an
-    immutable JVM ``LocalTableScan``, so the noise is frozen (re-reads
-    cannot re-sample).  At scale nothing changes: key sets above
-    :data:`SMALL_RELEASE_ROWS` keep the distributed executor path.
+    Python stages and zero extra exchanges.  The accounting is
+    unchanged: nothing observed here depends on a draw, and each
+    mechanism is invoked exactly once.  Non-noise columns never leave
+    Arrow, and the result freezes through :func:`freeze_small`.
     """
-    if known_rows > SMALL_RELEASE_ROWS:
-        return None
-    for fld in df.schema.fields:
-        if fld.dataType.simpleString() not in _DRIVER_RELEASE_TYPES:
-            return None
-    spec_cols = {c for c, _, _ in noise_specs}
-    if not spec_cols.issubset(set(df.columns)):
-        return None
-
     import pyarrow as pa
     from pyspark.sql import types as T
 
     head = _collect_bounded(df, known_rows)
-    # nulls in a spec column (impossible for the 0-filled factory
-    # releases) would reach the mechanism as NaN — or silently turn
-    # null into NaN on a pure cast: bail out pre-draw either way
     for col, _, _ in noise_specs:
         if head.column(col).null_count:
-            return None
+            raise ValueError(f"noise column {col!r} holds nulls")
 
-    target_fields = []
-    by_name = {c: (fn, out_type) for c, fn, out_type in noise_specs}
-    for fld in df.schema.fields:
-        if fld.name in by_name:
-            out_type = by_name[fld.name][1]
-            dt = T.LongType() if out_type == "long" else T.DoubleType()
-            target_fields.append(T.StructField(fld.name, dt, fld.nullable))
-        else:
-            target_fields.append(fld)
-    target_schema = T.StructType(target_fields)
-
+    types = {
+        "long": (pa.int64(), T.LongType()),
+        "double": (pa.float64(), T.DoubleType()),
+    }
+    fields = {fld.name: fld for fld in df.schema.fields}
     for col, fn, out_type in noise_specs:
         ser = head.column(col).to_pandas()
         if fn is not None:
             ser = fn(ser)
-        pa_type = pa.int64() if out_type == "long" else pa.float64()
+        pa_type, spark_type = types[out_type]
+        fields[col] = T.StructField(col, spark_type, fields[col].nullable)
         idx = head.schema.get_field_index(col)
         arr = pa.array(ser.to_numpy(), type=pa_type)
         head = head.set_column(idx, pa.field(col, pa_type), arr)
-    head = head.sort_by([(c, "ascending") for c in head.column_names])
-    return df.sparkSession.createDataFrame(head, schema=target_schema)
+    return freeze_small(head, T.StructType(list(fields.values())))
 
 
 _LOCAL_ROWS_PER_PARTITION = 25_000
