@@ -7,6 +7,9 @@
 * No measurement builds its own release frame: ``createDataFrame``
   and Arrow ``sort_by`` stay out of ``measurements/``, so every small
   release leaves through ``misc.freeze_small``.
+* Every executor noise UDF comes from ``measurements.spark.noise_column``,
+  which marks it nondeterministic: no other code under
+  ``measurements/`` calls ``pandas_udf``.
 * The narrowed handlers still do their job: ``local_rows_df`` falls
   back to the classic ``createDataFrame`` only for values the Arrow
   bridge cannot represent, and lets every other error through.
@@ -86,3 +89,25 @@ def test_measurements_build_no_frames_of_their_own():
             ):
                 offenders.append(f"{path.name}:{node.lineno} {node.func.attr}")
     assert not offenders, "measurements bypassing freeze_small: " + ", ".join(offenders)
+
+
+def test_noise_udfs_come_from_noise_column():
+    """``pandas_udf`` is called under ``measurements/`` only inside
+    ``noise_column``, so no draw can skip ``asNondeterministic()``."""
+    root = Path(tumult_core_spark.__file__).parent / "measurements"
+    inside, offenders = set(), []
+    for path in sorted(root.rglob("*.py")):
+        tree = ast.parse(path.read_text(), filename=str(path))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name == "noise_column":
+                inside |= {id(n) for n in ast.walk(node)}
+        for node in ast.walk(tree):
+            func = getattr(node, "func", None)
+            name = getattr(func, "attr", None) or getattr(func, "id", None)
+            if isinstance(node, ast.Call) and name == "pandas_udf":
+                if id(node) not in inside:
+                    offenders.append(f"{path.name}:{node.lineno}")
+    assert inside, "noise_column not found under measurements/"
+    assert not offenders, "noise UDFs built outside noise_column: " + ", ".join(
+        offenders
+    )

@@ -182,8 +182,10 @@ def test_release_freeze_is_local_relation_not_python_rdd(spark):
     first = sorted(rel.collect(), key=lambda r: r.k)
     second = sorted(rel.collect(), key=lambda r: r.k)
     assert [r.v for r in first] == [r.v for r in second]
-    # Arrow round-trip fidelity: schema intact, null-vs-NaN preserved
-    assert rel.schema == noisy.schema
+    # Arrow round-trip fidelity: names and types intact (every frozen
+    # field is nullable, as on the parquet branch), null-vs-NaN preserved
+    assert rel.dtypes == noisy.dtypes
+    assert all(f.nullable for f in rel.schema.fields)
     assert [r.n for r in first] == [0, None, 2, None, 4, None]
     assert [x != x for x in (r.x for r in first)] == [
         True, False, False, True, False, False,
@@ -760,6 +762,110 @@ def test_apply_in_pandas_distributed_keys_path(spark, monkeypatch):
     assert dist[(1, 1)] == 0  # absent key 0-filled through the same path
 
 
+@pytest.mark.parametrize(
+    "col_type",
+    ["decimal(10,2)", "binary", "array<int>", "map<string,int>"],
+)
+def test_apply_in_pandas_hands_typed_empty_frames_for_every_type(spark, col_type):
+    """apply_in_pandas has one plan for every data type: a public key
+    with no data rows gets an empty frame with the same dtypes as the
+    frames of keys with data, and every output matches func applied
+    to the same groups in pandas."""
+    from decimal import Decimal
+
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from tumult_core_spark.utils.grouped_dataframe import GroupedDataFrame
+
+    values = {
+        "decimal(10,2)": [Decimal("1.50"), Decimal("-3.00"), Decimal("2.25")],
+        "binary": [bytearray(b"ab"), bytearray(b""), bytearray(b"c")],
+        "array<int>": [[1, 2], [], [3]],
+        "map<string,int>": [{"a": 1}, {}, {"b": 2, "c": 3}],
+    }[col_type]
+    data = spark.createDataFrame(
+        [("a", values[0], 1), ("a", values[1], 2), ("b", values[2], 3)],
+        f"g string, v {col_type}, w long",
+    )
+    keys = spark.createDataFrame([("a",), ("b",), ("zz",)], "g string")
+    out_schema = T.StructType(
+        [
+            T.StructField("n", T.LongType()),
+            T.StructField("dtypes", T.StringType()),
+            T.StructField("values", T.StringType()),
+        ]
+    )
+
+    def per_group(pdf):
+        pdf = pdf.sort_values("w")
+        return pd.DataFrame(
+            {
+                "n": [len(pdf)],
+                "dtypes": [str(pdf.dtypes.to_dict())],
+                "values": [repr(pdf["v"].tolist())],
+            }
+        )
+
+    out = GroupedDataFrame(data, keys, n_keys=3).apply_in_pandas(
+        per_group, out_schema
+    )
+    got = {r["g"]: (r["n"], r["dtypes"], r["values"]) for r in out.collect()}
+    assert got["zz"][0] == 0
+    assert got["zz"][1] == got["a"][1] == got["b"][1]
+
+    pdf = data.toPandas()
+    expected = {}
+    for key in ("a", "b", "zz"):
+        ref = per_group(pdf.loc[pdf["g"] == key, ["v", "w"]]).iloc[0]
+        expected[key] = (ref["n"], ref["dtypes"], ref["values"])
+    assert got == expected
+
+
+def test_above_limit_key_product_has_no_python_rdd_scan(spark, monkeypatch):
+    """A column-domain key product above the driver limit is still built
+    from JVM-local relations: its plan has no Python-RDD scan, which
+    would run Python tasks on every evaluation of the keys."""
+    from pyspark.sql import types as T
+
+    from tumult_core_spark.transformations import groupby as gb_mod
+
+    schema = T.StructType(
+        [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
+    )
+    domains = {"a": [0, 1, 2], "b": ["x", "y"]}
+    monkeypatch.setattr(gb_mod, "_DRIVER_PRODUCT_LIMIT", 4)
+    keys = gb_mod.compute_full_domain_df(spark, domains, schema)
+    assert "ExistingRDD" not in plan_of(keys)
+    assert sorted(tuple(r) for r in keys.collect()) == [
+        (a, b) for a in (0, 1, 2) for b in ("x", "y")
+    ]
+
+
+def test_materialize_runs_no_job_after_the_write(spark):
+    """The large freeze reads its parquet back with the written frame's
+    schema: one materialize call runs the write job and no
+    schema-inference job after it."""
+    import uuid
+
+    from tumult_core_spark.utils.misc import materialize
+
+    df = spark.range(50).select(
+        F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+    )
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = materialize(df)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert out.dtypes == df.dtypes
+    assert sorted(tuple(r) for r in out.collect()) == [(i, 2 * i) for i in range(50)]
+
+
 def test_truncation_copy_index_is_partial_aggregated(spark, lineitem):
     """truncate_large_groups derives the duplicate copy index from a
     count aggregate, not a window over all columns: the plan must show
@@ -1005,7 +1111,7 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
         exec_out = m(lineitem)
     assert "LocalTableScan" not in plan_of(exec_out)
     assert sorted(exec_out.collect()) == driver_rows
-    assert exec_out.dtypes == driver_out.dtypes
+    assert exec_out.schema == driver_out.schema
 
     # float sum keeps the double release type on both paths
     gb2 = create_groupby_from_list_of_keys(

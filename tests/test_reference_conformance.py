@@ -98,6 +98,25 @@ class TestCountGroupedConformance:
         )
         assert [tuple(r) for r in self._cg()(gdf).collect()] == [(0,)]
 
+    def test_zero_groupby_columns_empty_data_sum(self, spark):
+        """A sum over an empty table with zero grouping columns is the
+        filled 0, not a null that the noise step would reject."""
+        from tumult_core_spark.transformations.agg import SumGrouped
+        from tumult_core_spark.utils.grouped_dataframe import GroupedDataFrame
+
+        sg = SumGrouped(
+            SparkGroupedDataFrameDomain(
+                schema={"A": INT64, "B": STR}, groupby_columns=[]
+            ),
+            SumOf(SymmetricDifference()),
+            "A", 0, 10, sum_column="S",
+        )
+        gdf = GroupedDataFrame(
+            spark.createDataFrame([], "A long, B string"),
+            spark.createDataFrame([], T.StructType([])),
+        )
+        assert [tuple(r) for r in sg(gdf).collect()] == [(0,)]
+
 
 class TestDropReplaceNullsConformance:
     def test_drop_nulls_may_target_grouping_column(self):

@@ -61,7 +61,7 @@ from .noise import (
     AddLaplaceNoise,
     AddNoiseToSeries,
 )
-from .spark import AddNoiseToColumn
+from .spark import AddNoiseToColumn, noise_column
 
 
 class NoiseMechanism(Enum):
@@ -787,7 +787,6 @@ class FusedMomentsMeasurement(Measurement):
         integral = isinstance(desc, SparkIntegerColumnDescriptor)
         mid = get_midpoint(lower_e, upper_e, integral)
         dev_lo, dev_hi = lower_e - mid, upper_e - mid
-        hi2 = max(dev_lo**2, dev_hi**2)
         mechanism = noise_mechanism or _default_mechanism(core, integral=integral)
         _check_mechanism_measure(mechanism, core)
 
@@ -796,35 +795,31 @@ class FusedMomentsMeasurement(Measurement):
             gb.input_domain != input_domain or gb.input_metric != input_metric
         ):
             raise ValueError("groupby_transformation does not match input")
-        stability = (
-            gb.stability_function(d_in_e) if gb is not None else d_in_e * (
-                2 if isinstance(input_metric, HammingDistance) else 1
-            )
-        )
-        # per-statistic sensitivities at the (possibly grouped) distance
-        sens_sod = stability * max(abs(dev_lo), abs(dev_hi))
-        sens_sos = stability * hi2
-        sens_count = stability
-        self._mechs = {
-            "sod": _make_mechanism(
-                mechanism, calculate_noise_scale(sens_sod, share, core),
-                NumpyIntegerDomain() if integral else NumpyFloatDomain(),
-            ),
-            "count": _make_mechanism(
-                NoiseMechanism.GEOMETRIC
-                if isinstance(core, PureDP)
-                else NoiseMechanism.DISCRETE_GAUSSIAN,
-                calculate_noise_scale(sens_count, share, core),
-                NumpyIntegerDomain(),
-            ),
-        }
-        if include_squares:
-            self._mechs["sos"] = _make_mechanism(
-                mechanism, calculate_noise_scale(sens_sos, share, core),
-                NumpyIntegerDomain() if integral else NumpyFloatDomain(),
-            )
         super().__init__(input_domain, input_metric, output_measure)
         self.groupby = gb
+        # per-statistic sensitivity per unit of stability: the noise
+        # scales below and privacy_function both read it
+        self._unit_sens = {
+            "sod": max(abs(dev_lo), abs(dev_hi)),
+            "count": ExactNumber(1),
+        }
+        if include_squares:
+            self._unit_sens["sos"] = max(dev_lo**2, dev_hi**2)
+        stability = self._stability(d_in_e)
+        stat_domain = NumpyIntegerDomain() if integral else NumpyFloatDomain()
+        count_mechanism = (
+            NoiseMechanism.GEOMETRIC
+            if isinstance(core, PureDP)
+            else NoiseMechanism.DISCRETE_GAUSSIAN
+        )
+        self._mechs = {
+            s: _make_mechanism(
+                count_mechanism if s == "count" else mechanism,
+                calculate_noise_scale(stability * unit, share, core),
+                NumpyIntegerDomain() if s == "count" else stat_domain,
+            )
+            for s, unit in self._unit_sens.items()
+        }
         self.measure_column = measure_column
         self.include_squares = include_squares
         self.postprocess = postprocess
@@ -833,26 +828,17 @@ class FusedMomentsMeasurement(Measurement):
         self._core = core
         self._output_measure_outer = output_measure
 
-    def privacy_function(self, d_in: Any):
-        from ..transformations.agg import _clip_expr  # sensitivity math shared
+    def _stability(self, d: ExactNumber) -> ExactNumber:
+        if self.groupby is not None:
+            return self.groupby.stability_function(d)
+        return d * (2 if isinstance(self.input_metric, HammingDistance) else 1)
 
-        d = ExactNumber(d_in)
-        stability = (
-            self.groupby.stability_function(d)
-            if self.groupby is not None
-            else d * (2 if isinstance(self.input_metric, HammingDistance) else 1)
-        )
+    def privacy_function(self, d_in: Any):
+        stability = self._stability(ExactNumber(d_in))
         total = ExactNumber(0)
-        for key, mech in self._mechs.items():
-            dev_lo = self._lower - self._mid
-            dev_hi = self._upper - self._mid
-            if key == "sod":
-                s = stability * max(abs(dev_lo), abs(dev_hi))
-            elif key == "sos":
-                s = stability * max(dev_lo**2, dev_hi**2)
-            else:
-                s = stability
-            total = total + ExactNumber(mech.privacy_function(s))
+        for s, mech in self._mechs.items():
+            unit = self._unit_sens[s]
+            total = total + ExactNumber(mech.privacy_function(stability * unit))
         if isinstance(self._output_measure_outer, ApproxDP):
             if self._delta is None or self._delta == 0:
                 return (total, ExactNumber(0))
@@ -900,45 +886,21 @@ class FusedMomentsMeasurement(Measurement):
         exprs = self._agg_exprs()
         if self.groupby is not None:
             gdf = self.groupby(data)
-            keys = self.groupby.groupby_columns
-            agged = gdf.dataframe.groupBy(*keys).agg(*exprs)
-            # one row per public key with 0-fill (null-safe key join)
-            cond = None
-            for c in keys:
-                clause = gdf.group_keys[c].eqNullSafe(agged[c])
-                cond = clause if cond is None else cond & clause
-            stat_cols = ["sod", "sos", "count"] if self.include_squares else ["sod", "count"]
-            joined = gdf.group_keys.join(agged, cond, "left").select(
-                *[gdf.group_keys[c] for c in keys],
-                *[
-                    F.coalesce(agged[s], F.lit(0)).alias(s)
-                    for s in stat_cols
-                ],
-            )
-            from .noise import AddNoiseToSeries
-
-            specs = []
-            for s in stat_cols:
-                mech = self._mechs[s]
-                series_mech = AddNoiseToSeries(mech)
-                if series_mech.adds_no_noise:
-                    continue
-                specs.append((s, series_mech, mech.release_type))
+            # one row per public key, every statistic 0-filled
+            joined = gdf.agg(*exprs, fill_value=0)
+            mechs = [(s, AddNoiseToSeries(m)) for s, m in self._mechs.items()]
             known_rows = gdf.n_keys
             # small public-key bound: draw all three statistics' noise
             # driver-side over the pre-noise aggregate — one job, no
             # ArrowEvalPython stages (utils.misc.freeze_noised_release);
-            # large key sets take the executor pandas-UDF path below
+            # large key sets noise on the executors
             if known_rows <= misc.SMALL_RELEASE_ROWS:
                 return self.postprocess(
-                    misc.freeze_noised_release(joined, specs, known_rows)
+                    misc.freeze_noised_release(joined, mechs, known_rows)
                 )
-            noisy = joined
-            for s, series_mech, out_type in specs:
-                udf = F.pandas_udf(
-                    lambda col, m=series_mech: m(col), returnType=out_type
-                ).asNondeterministic()
-                noisy = noisy.withColumn(s, udf(F.col(s)))
+            noisy = joined.withColumns(
+                {s: noise_column(m)(joined[s]) for s, m in mechs}
+            )
             return self.postprocess(
                 misc.sanitize_df(noisy, known_rows=known_rows)
             )

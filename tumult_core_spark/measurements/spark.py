@@ -14,15 +14,17 @@ The privacy-critical physical details (reference
   ``sanitize_df``'s small branch.  Large ones take ``sanitize_df``'s
   ``rand()``-keyed shuffle and single parquet write.  No branch
   observes the size of a noised relation;
-* noise UDFs are marked ``asNondeterministic()`` so Catalyst never
-  re-executes, reorders, or pushes them down.
+* every executor-side draw goes through :func:`noise_column`, the one
+  place that builds a noise UDF; it always marks the UDF
+  ``asNondeterministic()``, so Catalyst never re-executes, reorders,
+  or pushes a draw down.
 """
 
 from __future__ import annotations
 
-from typing import Any, Optional
+from typing import Any, Callable, Optional
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -45,7 +47,24 @@ from ..utils.distributions import double_sided_geometric_cmf_exact
 from ..utils import misc
 from ..utils.grouped_dataframe import GroupedDataFrame
 from ..utils.misc import persisted, sanitize_df
-from .noise import AddNoiseToSeries
+from .noise import AddGeometricNoise, AddNoiseToSeries
+
+
+def noise_column(mech: AddNoiseToSeries) -> Callable[[Column], Column]:
+    """The executor-side draw of ``mech`` as a ``Column -> Column``
+    function, typed as the mechanism's ``release_type``.
+
+    This is the only place a measurement builds a noise UDF: an
+    Arrow-batched pandas UDF, always marked ``asNondeterministic()`` so
+    Catalyst never re-executes, duplicates, reorders or pushes the draw
+    down, and the column is noised exactly once per evaluation of the
+    frozen plan.  A mechanism that adds no noise (scale 0) is a plain
+    cast to the release type, with no Python stage.
+    """
+    out_type = mech.noise_mechanism.release_type
+    if mech.adds_no_noise:
+        return lambda col: col.cast(out_type)
+    return F.pandas_udf(lambda s: mech(s), returnType=out_type).asNondeterministic()
 
 
 class SparkMeasurement(Measurement):
@@ -67,8 +86,8 @@ class AddNoiseToColumn(SparkMeasurement):
 
     Input metric is ``OnColumn(measure_column, SumOf|RootSumOfSquared(
     AbsoluteDifference()))`` — the metric produced by CountGrouped /
-    SumGrouped.  The noise is attached as an Arrow-batched
-    ``pandas_udf`` marked nondeterministic.
+    SumGrouped.  Small releases draw the noise driver-side; large ones
+    noise on the executors through :func:`noise_column`.
     """
 
     def __init__(
@@ -140,24 +159,14 @@ class AddNoiseToColumn(SparkMeasurement):
         rows = self.known_release_rows
         if rows > misc.SMALL_RELEASE_ROWS:
             return sanitize_df(self.call_unsanitized(data), known_rows=rows)
-        inner = self.measurement
-        fn = None if inner.adds_no_noise else inner
-        spec = (self.measure_column, fn, inner.noise_mechanism.release_type)
-        return misc.freeze_noised_release(data, [spec], rows)
+        return misc.freeze_noised_release(
+            data, [(self.measure_column, self.measurement)], rows
+        )
 
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
-        inner = self.measurement
-        out_type = inner.noise_mechanism.release_type
-        if inner.adds_no_noise:
-            return data.withColumn(
-                self.measure_column, F.col(self.measure_column).cast(out_type)
-            )
-
-        noise_udf = F.pandas_udf(
-            lambda s: inner(s), returnType=out_type
-        ).asNondeterministic()
+        noise = noise_column(self.measurement)
         return data.withColumn(
-            self.measure_column, noise_udf(F.col(self.measure_column))
+            self.measure_column, noise(F.col(self.measure_column))
         )
 
 
@@ -268,18 +277,10 @@ class GeometricPartitionSelection(SparkMeasurement):
         return data.groupBy(*cols).agg(F.count(F.lit(1)).alias(self.count_column))
 
     def _noise_and_filter(self, counts: DataFrame) -> DataFrame:
-        from .noise import AddGeometricNoise
-
-        if self.alpha == 0:
-            noisy = counts
-        else:
-            mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
-            udf = F.pandas_udf(
-                lambda s: mech(s), returnType="long"
-            ).asNondeterministic()
-            noisy = counts.withColumn(
-                self.count_column, udf(F.col(self.count_column))
-            )
+        noise = noise_column(AddNoiseToSeries(AddGeometricNoise(self.alpha)))
+        noisy = counts.withColumn(
+            self.count_column, noise(F.col(self.count_column))
+        )
         return noisy.filter(F.col(self.count_column) >= self.threshold)
 
     def __call__(self, data: DataFrame) -> DataFrame:
@@ -331,12 +332,8 @@ class GeometricPartitionSelection(SparkMeasurement):
         mechanism as a pandas Series; everything else stays Arrow."""
         import pyarrow as pa
 
-        from .noise import AddGeometricNoise
-
-        counts = head.column(self.count_column).to_pandas()
-        if self.alpha != 0 and head.num_rows:
-            mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
-            counts = mech(counts).astype("int64")
+        mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
+        counts = mech(head.column(self.count_column).to_pandas())
         idx = head.schema.get_field_index(self.count_column)
         tbl = head.set_column(
             idx, head.schema.field(idx), pa.array(counts, pa.int64())
@@ -474,8 +471,6 @@ class SparseVectorPrefixSums(SparkMeasurement):
         import numpy as np
         import pyarrow as pa
 
-        from .noise import AddGeometricNoise
-
         head = misc._collect_bounded(narrow, bound, "known_input_rows")
         if any(head.column(c).null_count for c in used):
             return None
@@ -500,14 +495,10 @@ class SparseVectorPrefixSums(SparkMeasurement):
             prefix = pdf[cnt].cumsum()
             group_codes = np.zeros(len(pdf), dtype=np.int64)
 
-        if self.alpha == 0:
-            noisy_totals = totals.astype("float64")
-            noisy_prefix = prefix.to_numpy()
-        else:
-            total_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
-            prefix_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
-            noisy_totals = total_mech(totals.astype("int64"))
-            noisy_prefix = prefix_mech(prefix.astype("int64")).to_numpy()
+        total_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
+        prefix_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
+        noisy_totals = total_mech(totals)
+        noisy_prefix = prefix_mech(prefix).to_numpy()
         thresholds = (
             float(self.threshold_fraction) * noisy_totals.to_numpy().astype("float64")
         )
@@ -573,25 +564,14 @@ class SparseVectorPrefixSums(SparkMeasurement):
     def call_unsanitized(self, data: DataFrame) -> DataFrame:
         from pyspark.sql import Window
 
-        from .noise import AddGeometricNoise, AddNoiseToSeries
-
         gcols = self.grouping_columns
         rank, cnt = self.rank_column, self.count_column
         frac = self.threshold_fraction
 
-        if self.alpha == 0:
-            noise_total = noise_prefix = lambda c: c
-        else:
-            total_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
-            prefix_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
-            total_udf = F.pandas_udf(
-                lambda s: total_mech(s), returnType="long"
-            ).asNondeterministic()
-            prefix_udf = F.pandas_udf(
-                lambda s: prefix_mech(s), returnType="long"
-            ).asNondeterministic()
-            noise_total = total_udf
-            noise_prefix = prefix_udf
+        noise_total = noise_column(
+            AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
+        )
+        noise_prefix = noise_column(AddNoiseToSeries(AddGeometricNoise(self.alpha)))
 
         # per-group noisy totals (one noise draw per group)
         agg_exprs = [F.sum(cnt).alias("__total")]

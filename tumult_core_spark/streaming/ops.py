@@ -504,6 +504,7 @@ def dp_windowed_counts(
     ``sink_writer(batch_df, batch_id)`` receives the noised batch.
     """
     from .. import samplers
+    from ..utils.misc import local_rows_df
 
     if not (epsilon_per_window > 0):  # also rejects NaN
         raise ValueError(
@@ -579,7 +580,7 @@ def dp_windowed_counts(
         grid is release-cardinality (windows x keys), so the
         broadcast cross join is trivially small."""
         sp = batch_df.sparkSession
-        keys_df = sp.createDataFrame(key_rows, schema=keys_schema)
+        keys_df = local_rows_df(sp, key_rows, keys_schema)
         wins = batch_df.select("window_start", "window_end").distinct()
         grid = wins.crossJoin(F.broadcast(keys_df))
         return (

@@ -142,9 +142,8 @@ def compute_full_domain_df(
         return local_rows_df(spark, rows, schema)
     result = None
     for c in names:
-        fld = schema[c]
-        col_df = spark.createDataFrame(
-            [(v,) for v in column_to_values[c]], schema=T.StructType([fld])
+        col_df = local_rows_df(
+            spark, [(v,) for v in column_to_values[c]], T.StructType([schema[c]])
         )
         result = col_df if result is None else result.crossJoin(F.broadcast(col_df))
     n_part = spark.sparkContext.defaultParallelism

@@ -77,11 +77,13 @@ def materialize(df: DataFrame) -> DataFrame:
     real cluster set ``SPARK_GRAFT_MATERIALIZE_DIR`` to a
     distributed-FS path (hdfs://, s3a://, or a shared mount) — every
     executor must be able to write it and the driver to read it back.
-    This is the only place measurement plans are forced.
+    This is the only place measurement plans are forced.  The read-back
+    takes the written frame's schema, so it runs no schema-inference
+    job; parquet reads every column back nullable.
     """
     path = _materialize_root() + "/" + uuid.uuid4().hex
     df.write.mode("overwrite").parquet(path)
-    return df.sparkSession.read.parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def cut_lineage(df: DataFrame, checkpoint_dir: Optional[str] = None) -> DataFrame:
@@ -246,7 +248,9 @@ def freeze_small(table, schema) -> DataFrame:
     Python-RDD scan (re-reads cost ~10 ms), it broadcasts for free in
     downstream joins, a re-read can never re-sample the noise, and the
     Arrow path round-trips nulls, NaN, dates, decimals and nested types
-    exactly.
+    exactly.  Every field is declared nullable, as the parquet branch
+    (:func:`materialize`) reads it back, so a release's schema does not
+    depend on which branch froze it.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -260,7 +264,30 @@ def freeze_small(table, schema) -> DataFrame:
     names = [str(i) for i in range(table.num_columns)]
     keys = pa.table([sort_key(c) for c in table.columns], names=names)
     order = pc.sort_indices(keys, sort_keys=[(n, "ascending") for n in names])
-    return SparkSession.active().createDataFrame(table.take(order), schema=schema)
+    return SparkSession.active().createDataFrame(
+        table.take(order), schema=_as_nullable(schema)
+    )
+
+
+def _as_nullable(data_type):
+    """``data_type`` with every field, element and value nullable, at
+    every nesting level (Spark's ``DataType.asNullable``)."""
+    from pyspark.sql import types as T
+
+    if isinstance(data_type, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _as_nullable(f.dataType), True, f.metadata)
+                for f in data_type.fields
+            ]
+        )
+    if isinstance(data_type, T.ArrayType):
+        return T.ArrayType(_as_nullable(data_type.elementType), True)
+    if isinstance(data_type, T.MapType):
+        return T.MapType(
+            _as_nullable(data_type.keyType), _as_nullable(data_type.valueType), True
+        )
+    return data_type
 
 
 def sanitize_df(df: DataFrame, known_rows: int) -> DataFrame:
@@ -325,16 +352,16 @@ def freeze_noised_release(df, noise_specs, known_rows):
 
     ``df`` is the PRE-noise release relation (e.g. the 0-filled grouped
     aggregate), ``known_rows`` the caller's a-priori public-key row
-    bound and ``noise_specs`` an ordered list of
-    ``(column, series_fn, out_type)`` — ``series_fn`` a
-    ``pd.Series -> pd.Series`` mechanism (:class:`AddNoiseToSeries`)
-    or ``None`` for a pure cast, ``out_type`` ``"long"`` / ``"double"``.
-    Callers take this branch when ``known_rows <= SMALL_RELEASE_ROWS``,
-    a decision made from the public bound alone.
+    bound and ``noise_specs`` an ordered list of ``(column, mech)``
+    pairs, ``mech`` an :class:`AddNoiseToSeries`.  Each column is
+    released as ``mech``'s ``release_type`` (at scale 0 the mechanism
+    returns its input cast to that type).  Callers take this branch when
+    ``known_rows <= SMALL_RELEASE_ROWS``, a decision made from the
+    public bound alone.
 
     A null in a spec column raises ``ValueError`` before any draw: the
-    mechanism would see it as NaN, and a pure cast would turn it into
-    NaN.  The 0-filled factory releases never hold one.
+    mechanism would see it as NaN.  The 0-filled factory releases never
+    hold one.
 
     Why: the executor path runs one ``ArrowEvalPython`` stage plus an
     exchange per release just to noise a public-key-sized relation
@@ -350,7 +377,7 @@ def freeze_noised_release(df, noise_specs, known_rows):
     from pyspark.sql import types as T
 
     head = _collect_bounded(df, known_rows)
-    for col, _, _ in noise_specs:
+    for col, _ in noise_specs:
         if head.column(col).null_count:
             raise ValueError(f"noise column {col!r} holds nulls")
 
@@ -359,12 +386,10 @@ def freeze_noised_release(df, noise_specs, known_rows):
         "double": (pa.float64(), T.DoubleType()),
     }
     fields = {fld.name: fld for fld in df.schema.fields}
-    for col, fn, out_type in noise_specs:
-        ser = head.column(col).to_pandas()
-        if fn is not None:
-            ser = fn(ser)
-        pa_type, spark_type = types[out_type]
-        fields[col] = T.StructField(col, spark_type, fields[col].nullable)
+    for col, mech in noise_specs:
+        ser = mech(head.column(col).to_pandas())
+        pa_type, spark_type = types[mech.noise_mechanism.release_type]
+        fields[col] = T.StructField(col, spark_type)
         idx = head.schema.get_field_index(col)
         arr = pa.array(ser.to_numpy(), type=pa_type)
         head = head.set_column(idx, pa.field(col, pa_type), arr)
