@@ -102,8 +102,8 @@ def main():
     count_t = CountGrouped(full_gb.output_domain, full_gb.output_metric, "__count")
     plans["bounds"] = count_t(full_gb(derive(li_pk)))
 
-    # private_join: truncation (TRUNCATE both sides) + inner join — the
-    # r18 salted-pass gating shows up as one fewer Exchange per side
+    # private_join: truncation (TRUNCATE both sides) + inner join — each
+    # side's rank filter plans as a partial + final WindowGroupLimit
     from tumult_core_spark.domains import DictDomain
     from tumult_core_spark.transformations.join import (
         PrivateJoin,

@@ -10,6 +10,11 @@
 * Every executor noise UDF comes from ``measurements.spark.noise_column``,
   which marks it nondeterministic: no other code under
   ``measurements/`` calls ``pandas_udf``.
+* The truncation utilities and ``utils/join.py`` name every column by
+  an exact reference: no ``F.col`` or ``F.expr`` (which parse a dotted
+  name as a struct access and cost a function lookup per use), and no
+  bare column-name string handed to ``groupBy``, ``select``,
+  ``partitionBy`` or ``orderBy``.
 * The narrowed handlers still do their job: ``local_rows_df`` falls
   back to the classic ``createDataFrame`` only for values the Arrow
   bridge cannot represent, and lets every other error through.
@@ -111,3 +116,95 @@ def test_noise_udfs_come_from_noise_column():
     assert not offenders, "noise UDFs built outside noise_column: " + ", ".join(
         offenders
     )
+
+
+_EXACT_NAME_MODULES = ("utils/truncation.py", "utils/join.py")
+_PARSING_FUNCTIONS = ("col", "expr")
+_COLUMN_LIST_CALLS = ("groupBy", "select", "partitionBy", "orderBy")
+
+
+def _names_a_column_by_string(node: ast.AST, stringy: set) -> bool:
+    """True if ``node`` evaluates to a column-name string or a list of
+    them: a string literal, a name bound to one, or a list, sum or
+    comprehension built from those."""
+    if isinstance(node, ast.Starred):
+        return _names_a_column_by_string(node.value, stringy)
+    if isinstance(node, ast.Constant):
+        return isinstance(node.value, str)
+    if isinstance(node, ast.JoinedStr):
+        return True
+    if isinstance(node, ast.Name):
+        return node.id in stringy
+    if isinstance(node, ast.Attribute):
+        return node.attr == "columns"
+    if isinstance(node, (ast.List, ast.Tuple)):
+        return any(_names_a_column_by_string(e, stringy) for e in node.elts)
+    if isinstance(node, ast.BinOp):
+        return _names_a_column_by_string(
+            node.left, stringy
+        ) or _names_a_column_by_string(node.right, stringy)
+    if isinstance(node, (ast.ListComp, ast.GeneratorExp)):
+        inner = set(stringy)
+        for gen in node.generators:
+            if _names_a_column_by_string(gen.iter, inner):
+                inner |= {n.id for n in ast.walk(gen.target) if isinstance(n, ast.Name)}
+        return _names_a_column_by_string(node.elt, inner)
+    return False
+
+
+def _string_bound_names(func: ast.FunctionDef) -> set:
+    """Names that hold column-name strings inside ``func``: parameters
+    annotated with ``str`` (``str``, ``List[str]``, ...), names assigned
+    from such values (``cols = df.columns``) and loop variables over
+    them."""
+    stringy = {
+        a.arg
+        for a in func.args.args + func.args.kwonlyargs
+        if a.annotation is not None and "str" in ast.unparse(a.annotation)
+    }
+    for node in ast.walk(func):  # breadth-first: outer statements first
+        if isinstance(node, ast.Assign) and _names_a_column_by_string(
+            node.value, stringy
+        ):
+            targets = node.targets
+        elif isinstance(node, ast.For) and _names_a_column_by_string(
+            node.iter, stringy
+        ):
+            targets = [node.target]
+        else:
+            continue
+        stringy |= {
+            n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+        }
+    return stringy
+
+
+def test_truncation_and_join_name_columns_exactly():
+    """``utils/truncation.py`` and ``utils/join.py`` call neither
+    ``F.col`` nor ``F.expr``, and pass no bare column-name string to
+    ``groupBy``, ``select``, ``partitionBy`` or ``orderBy``: every
+    column is an exact reference taken from its frame."""
+    root = Path(tumult_core_spark.__file__).parent
+    offenders = []
+    for rel in _EXACT_NAME_MODULES:
+        tree = ast.parse((root / rel).read_text(), filename=rel)
+        for func in ast.walk(tree):
+            if not isinstance(func, ast.FunctionDef):
+                continue
+            stringy = _string_bound_names(func)
+            for node in ast.walk(func):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                if (
+                    isinstance(f, ast.Attribute)
+                    and isinstance(f.value, ast.Name)
+                    and f.value.id == "F"
+                    and f.attr in _PARSING_FUNCTIONS
+                ) or (isinstance(f, ast.Name) and f.id in _PARSING_FUNCTIONS):
+                    offenders.append(f"{rel}:{node.lineno} {ast.unparse(f)}")
+                elif isinstance(f, ast.Attribute) and f.attr in _COLUMN_LIST_CALLS:
+                    args = node.args + [k.value for k in node.keywords]
+                    if any(_names_a_column_by_string(a, stringy) for a in args):
+                        offenders.append(f"{rel}:{node.lineno} {f.attr} by name")
+    assert not offenders, "columns named by string: " + ", ".join(sorted(set(offenders)))

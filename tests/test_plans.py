@@ -870,8 +870,7 @@ def test_truncation_copy_index_is_partial_aggregated(spark, lineitem):
     """truncate_large_groups derives the duplicate copy index from a
     count aggregate, not a window over all columns: the plan must show
     a partial (map-side) HashAggregate — duplicates collapse before
-    the shuffle — and stay within 3 exchanges (collapse, salted local
-    window, exact window)."""
+    the shuffle — and stay within 3 exchanges."""
     import re
 
     from tumult_core_spark.utils.truncation import truncate_large_groups
@@ -885,6 +884,49 @@ def test_truncation_copy_index_is_partial_aggregated(spark, lineitem):
     assert "partial_count" in plan, plan
     assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 3, plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+#: py4j sends of one ``truncate_large_groups`` build on an 8-column
+#: frame: 171 at the last measurement, plus 20%.  Resolving a column by
+#: ``F.col`` costs 13 sends and by ``df[name]`` one, so a plan that
+#: names its columns through ``F.col`` again goes far past this.
+TRUNCATION_BUILD_PY4J_SENDS = 205
+
+
+def test_truncation_build_py4j_budget(spark):
+    """Building the truncation plan (no job runs) stays within a pinned
+    number of py4j sends, counted by wrapping the gateway client's
+    ``send_command``.  Earlier tests' garbage is collected first and
+    the cycle collector is paused while counting, so no other object's
+    py4j release lands in the count."""
+    import gc
+
+    from tumult_core_spark.utils.truncation import truncate_large_groups
+
+    df = spark.range(100).select(
+        *[(F.col("id") % (i + 2)).alias(f"c{i}") for i in range(8)]
+    )
+    truncate_large_groups(df, ["c0"], 3)  # warm-up
+    client = spark.sparkContext._gateway._gateway_client
+    orig_send = client.send_command
+    sends = 0
+
+    def send_command(*a, **k):
+        nonlocal sends
+        sends += 1
+        return orig_send(*a, **k)
+
+    # an instance attribute shadows the class method for every
+    # JavaObject that holds this client
+    gc.collect()
+    gc.disable()
+    client.send_command = send_command
+    try:
+        truncate_large_groups(df, ["c0"], 3)
+    finally:
+        del client.send_command
+        gc.enable()
+    assert 0 < sends <= TRUNCATION_BUILD_PY4J_SENDS, sends
 
 
 def test_global_shuffle_no_single_task_sort(spark, sf_dir):

@@ -1,5 +1,7 @@
 """Joins, truncation, partition, maps, row ops."""
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -107,11 +109,6 @@ class TestTruncation:
         rows1 = sorted(map(tuple, truncate_large_groups(kv, ["k"], 2).collect()))
         rows2 = sorted(map(tuple, truncate_large_groups(shuffled, ["k"], 2).collect()))
         assert rows1 == rows2
-        # salted and unsalted plans select the identical row multiset
-        rows3 = sorted(
-            map(tuple, truncate_large_groups(kv, ["k"], 2, salt_buckets=1).collect())
-        )
-        assert rows1 == rows3
 
     def test_truncate_large_groups_salted_plan(self, spark):
         # r18: a hot key must still be pre-ranked map-side before the
@@ -139,28 +136,35 @@ class TestTruncation:
         )
         assert repartitioned == sorted(map(tuple, out.collect()))
 
-    def test_truncate_large_groups_salted_fallback(self, spark):
-        # when the engine's rank-limit rewrite cannot fire (threshold
-        # above the conf), the manual salted local pass must return —
-        # and the released multiset must be identical on both paths
+    @pytest.mark.parametrize("limit_conf", ["3", "-1"])
+    def test_truncate_large_groups_engine_limit_off(self, spark, limit_conf):
+        # when the engine's rank-limit rewrite cannot fire (threshold 5
+        # above the conf, or the rewrite disabled), the plan is the same
+        # single window without the partial pre-shuffle pass, and the
+        # released multiset equals the default-config one
         df = spark.range(0, 10_000, 1, 8).select(
             (F.col("id") % 3).alias("k"), F.col("id").alias("v")
+        )
+        default_rows = sorted(
+            map(tuple, truncate_large_groups(df, ["k"], 5).collect())
         )
         key = "spark.sql.optimizer.windowGroupLimitThreshold"
         old = spark.conf.get(key)
         try:
-            spark.conf.set(key, "3")  # threshold 5 > 3 -> salted pass
-            salted = truncate_large_groups(df, ["k"], 5)
-            plan = salted._jdf.queryExecution().optimizedPlan().toString()
-            assert "__salt" in plan
-            assert plan.count("Window") >= 2
-            salted_rows = sorted(map(tuple, salted.collect()))
+            spark.conf.set(key, limit_conf)
+            out = truncate_large_groups(df, ["k"], 5)
+            plan = out._jdf.queryExecution().optimizedPlan().toString()
+            phys = out._jdf.queryExecution().executedPlan().toString()
+            rows = sorted(map(tuple, out.collect()))
         finally:
             spark.conf.set(key, old)
-        plain_rows = sorted(
-            map(tuple, truncate_large_groups(df, ["k"], 5).collect())
-        )
-        assert salted_rows == plain_rows
+        assert "__salt" not in plan
+        partial = [
+            line for line in phys.splitlines()
+            if "WindowGroupLimit" in line and "Partial" in line
+        ]
+        assert not partial, phys
+        assert rows == default_rows
 
     def test_drop_large_groups(self, spark, kv):
         out = drop_large_groups(kv, ["k"], 2)
@@ -187,6 +191,84 @@ class TestTruncation:
             out.groupBy("g").agg(F.countDistinct("u").alias("n")).collect()
         )
         assert all(r["n"] <= 2 for r in per_group)
+
+
+class TestExactColumnNames:
+    """A dot in a column name is part of the name, never a struct
+    access: every truncation utility, ``join`` and ``PrivateJoin``
+    resolve each column by its exact name, for a dotted join key and a
+    dotted non-key column alike."""
+
+    @staticmethod
+    def _frames(spark, key):
+        left = spark.createDataFrame(
+            [(1, 10, "a"), (1, 11, "b"), (1, 12, "c"), (2, 20, "d")],
+            f"`{key}` long, `v.x` long, w string",
+        )
+        right = spark.createDataFrame(
+            [(1, 100), (2, 200), (2, 201)], f"`{key}` long, `v.y` long"
+        )
+        return left, right
+
+    @staticmethod
+    def _per_key(df, key):
+        return Counter(row[key] for row in df.collect())
+
+    @pytest.mark.parametrize("key", ["k", "k.a"])
+    def test_truncation_utilities(self, spark, key):
+        from tumult_core_spark.utils.truncation import limit_keys_per_group
+
+        left, _ = self._frames(spark, key)
+        out = truncate_large_groups(left, [key], 2)
+        assert out.columns == left.columns
+        assert self._per_key(out, key) == {1: 2, 2: 1}
+        # a dotted grouping column that is not the key
+        assert truncate_large_groups(left, ["v.x"], 1).count() == 4
+        out = drop_large_groups(left, [key], 2)
+        assert out.columns == left.columns
+        assert sorted(map(tuple, out.collect())) == [(2, 20, "d")]
+        out = limit_keys_per_group(left, [key], ["v.x"], 1)
+        assert out.columns == left.columns
+        assert self._per_key(out, key) == {1: 1, 2: 1}
+
+    @pytest.mark.parametrize("key", ["k", "k.a"])
+    @pytest.mark.parametrize("nulls_are_equal", [False, True])
+    def test_join(self, spark, key, nulls_are_equal):
+        from tumult_core_spark.utils.join import join
+
+        left, right = self._frames(spark, key)
+        out = join(left, right, on=[key], nulls_are_equal=nulls_are_equal)
+        assert out.columns == [key, "v.x", "w", "v.y"]
+        assert sorted(map(tuple, out.collect())) == [
+            (1, 10, "a", 100), (1, 11, "b", 100), (1, 12, "c", 100),
+            (2, 20, "d", 200), (2, 20, "d", 201),
+        ]
+
+    @pytest.mark.parametrize("key", ["k", "k.a"])
+    @pytest.mark.parametrize(
+        "strategy, threshold, rows",
+        [
+            (TruncationStrategy.TRUNCATE, 2, 4),  # 2*1 + 1*2
+            (TruncationStrategy.DROP, 2, 2),  # left key 1 dropped
+            (TruncationStrategy.NO_TRUNCATION, float("inf"), 5),
+        ],
+    )
+    def test_private_join(self, spark, key, strategy, threshold, rows):
+        from tumult_core_spark.domains import DictDomain
+
+        left, right = self._frames(spark, key)
+        domain = DictDomain(
+            {
+                "l": SparkDataFrameDomain({key: INT, "v.x": INT, "w": STR}),
+                "r": SparkDataFrameDomain({key: INT, "v.y": INT}),
+            }
+        )
+        t = PrivateJoin(
+            domain, "l", "r", strategy, strategy, threshold, threshold
+        )
+        out = t({"l": left, "r": right})
+        assert out.columns == [key, "v.x", "w", "v.y"]
+        assert out.count() == rows
 
 
 class TestJoins:
@@ -465,19 +547,6 @@ class TestFlatMapByKeyHotKey:
 
 
 class TestScaleUtils:
-    def test_salted_group_count(self, spark, kv):
-        from tumult_core_spark.utils.scale import salted_group_count
-
-        out = {r["k"]: r["count"] for r in salted_group_count(kv, ["k"]).collect()}
-        assert out == {1: 3, 2: 2, 3: 1}
-
-    def test_salted_window_topk(self, spark, kv):
-        from tumult_core_spark.utils.scale import salted_window_topk
-
-        out = salted_window_topk(kv, ["k"], "v", 2)
-        got = sorted(map(tuple, out.collect()))
-        assert got == [(1, "a"), (1, "b"), (2, "d"), (2, "e"), (3, "f")]
-
     def test_bucketed_table_roundtrip(self, spark, kv, tmp_path):
         from tumult_core_spark.utils.scale import write_bucketed_table
 

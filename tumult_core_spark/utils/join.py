@@ -13,6 +13,9 @@ Semantics follow the reference (``tmlt/core/utils/join.py:27-565``):
 
 The physical join strategy is left entirely to Catalyst/AQE; callers
 that know one side is small pass ``broadcast_right=True`` to hint.
+Every column is resolved by its exact name
+(:func:`~tumult_core_spark.utils.misc.column_ref`), so a dotted name is
+a plain column, not a struct access.
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from ..domains import (
     SparkDataFrameDomain,
     SparkFloatColumnDescriptor,
 )
+from .misc import column_ref
 
 _VALID_HOW = ("inner", "left", "right", "outer", "left_anti", "left_semi")
 
@@ -194,27 +198,27 @@ def join(
     if nulls_are_equal:
         cond = None
         for c in on:
-            clause = left[c].eqNullSafe(right_in[c])
+            clause = column_ref(left, c).eqNullSafe(column_ref(right_in, c))
             cond = clause if cond is None else cond & clause
         joined = left.join(right_in, cond, how)
     else:
         joined = left.join(right_in, on, how)
 
     if how in ("left_anti", "left_semi"):
-        return joined.select(*[left[c] for c in out_cols])
+        return joined.select(*[column_ref(left, c) for c in out_cols])
 
     select_exprs: List[Column] = []
     for name, (l_col, r_col) in out_cols.items():
         if l_col is not None and r_col is not None:
             if nulls_are_equal:
                 # both sides present as distinct columns; coalesce keys
-                expr = F.coalesce(left[l_col], right_in[r_col]).alias(name)
+                expr = F.coalesce(column_ref(left, l_col), column_ref(right_in, r_col))
             else:
                 # Spark's on=[...] join already merged the key columns
-                expr = F.col(l_col).alias(name)
+                expr = column_ref(joined, l_col)
         elif l_col is not None:
-            expr = left[l_col].alias(name)
+            expr = column_ref(left, l_col)
         else:
-            expr = right_in[r_col].alias(name)
-        select_exprs.append(expr)
+            expr = column_ref(right_in, r_col)
+        select_exprs.append(expr.alias(name))
     return joined.select(*select_exprs)

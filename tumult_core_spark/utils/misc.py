@@ -27,7 +27,7 @@ from typing import Iterator, Optional
 
 from py4j.protocol import Py4JError
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _MATERIALIZE_ROOT: Optional[str] = None
@@ -493,6 +493,18 @@ def escape_column_name(column_name: str) -> str:
     ):
         return column_name
     return "`" + column_name.replace("`", "``") + "`"
+
+
+def column_ref(df: DataFrame, name: str) -> Column:
+    """``df``'s column named exactly ``name``, resolved in one py4j send.
+
+    The name is always backtick-quoted, so a dot, a space or a
+    backtick in it is part of the name, never a struct access or an
+    SQL fragment (``F.col(name)`` and ``df[name]`` parse it).  The
+    result is bound to ``df``'s attribute, so it stays valid in any
+    frame derived from ``df`` that keeps the column.
+    """
+    return df["`" + name.replace("`", "``") + "`"]
 
 
 def copy_if_mutable(value):

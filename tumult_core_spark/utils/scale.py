@@ -1,17 +1,19 @@
-"""Scale-out utilities: bucketing and skew mitigation.
+"""Scale-out utilities: broadcast gating and bucketing.
 
 These encode the 100 TB playbook pieces that are configuration rather
-than algorithm: bucketed tables make repeated equi-joins/aggregations
-on the bucket key shuffle-free; salting spreads a hot key across
-reducers when AQE's skew handling cannot apply (e.g. window
-functions).
+than algorithm: a broadcast hint only below a known size, and bucketed
+tables that make repeated equi-joins/aggregations on the bucket key
+shuffle-free.  Skew needs no helper here: aggregations combine
+map-side, AQE splits skewed join partitions, and the truncation
+window's rank limit runs as Spark's partial ``WindowGroupLimit``
+before its exchange (see ``utils/truncation.py``).
 """
 
 from __future__ import annotations
 
 from typing import List, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -84,58 +86,3 @@ def write_bucketed_table(
     if path is not None:
         writer = writer.option("path", path)
     writer.saveAsTable(table_name)
-
-
-def salted_group_count(
-    df: DataFrame,
-    group_cols: List[str],
-    count_column: str = "count",
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Two-phase count for skewed keys: count per (key, salt), then
-    re-aggregate per key.
-
-    Spark's hash aggregation already map-side combines, which handles
-    most skew for counts; explicit salting matters when the *reduce*
-    side of a single hot key still overwhelms one task (e.g. extreme
-    cardinality-1 keys combined with high-cardinality neighbors).
-    """
-    salted = df.withColumn(
-        "__salt", (F.spark_partition_id() % salt_buckets).cast("int")
-    )
-    partial = salted.groupBy(*group_cols, "__salt").agg(
-        F.count(F.lit(1)).alias("__partial")
-    )
-    return partial.groupBy(*group_cols).agg(
-        F.sum("__partial").cast("long").alias(count_column)
-    )
-
-
-def salted_window_topk(
-    df: DataFrame,
-    group_cols: List[str],
-    order_col: str,
-    k: int,
-    salt_buckets: int = 32,
-) -> DataFrame:
-    """Top-k rows per group under skew: local top-k per (group, salt)
-    first, so no single task ever sees a hot group's full row set,
-    then exact top-k over the k * salt_buckets survivors."""
-    from pyspark.sql import Window
-
-    cols = df.columns
-    salted = df.withColumn(
-        "__salt", (F.spark_partition_id() % salt_buckets).cast("int")
-    )
-    w_local = Window.partitionBy(*group_cols, "__salt").orderBy(F.col(order_col))
-    survivors = (
-        salted.withColumn("__rn", F.row_number().over(w_local))
-        .filter(F.col("__rn") <= k)
-        .select(*cols)
-    )
-    w_final = Window.partitionBy(*group_cols).orderBy(F.col(order_col))
-    return (
-        survivors.withColumn("__rn", F.row_number().over(w_final))
-        .filter(F.col("__rn") <= k)
-        .select(*cols)
-    )

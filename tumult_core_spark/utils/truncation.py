@@ -21,37 +21,41 @@ Physical deltas vs the reference, for 100 TB scale:
   hot group collapses to ``threshold`` copies of a single row instead
   of a spread sample (the reference pins this with
   ``test_hash_truncation_duplicate_rows_not_clumped``).  Copies beyond
-  the threshold are dropped the moment they are numbered, so the extra
-  window's output — and everything downstream — is bounded even for a
+  the threshold are dropped the moment they are numbered, so the
+  numbered copies — and everything downstream — are bounded even for a
   row duplicated a billion times.  ``limit_keys_per_group`` and
   ``drop_large_groups`` select whole key sets / groups, where copy
   identity cannot matter, and skip the index.
 
-Skew note: ``truncate_large_groups`` additionally runs a salted
-two-phase window (local top-k per input-partition salt, exact top-k
-over the bounded survivors), so a hot key is ranked by many tasks
-instead of concentrating its full group in one; the result is
-identical to the single global window because the per-row order key
-is fixed before the local pass.
+Skew: ``truncate_large_groups`` ranks with ``row_number`` and keeps
+rows ranked at most ``threshold``.  Spark plans that rank limit as a
+``WindowGroupLimit`` (SPARK-37099) whenever ``threshold`` is at or
+under ``spark.sql.optimizer.windowGroupLimitThreshold`` (default
+1000), with a partial pass before the window's exchange, so each input
+partition ships at most ``threshold`` rows of a hot key.  Above that
+conf, or with the rewrite disabled, the released multiset is the same
+and each key is ranked in one task.
+
+Every input column is resolved once, by its exact name, from the input
+frame (:func:`~tumult_core_spark.utils.misc.column_ref`), and that one
+reference is reused in the aggregate, the hash, the window and the
+final projection: a dotted name is a plain column, and the plan costs
+one py4j send per column instead of one function lookup per use.
 """
 
 from __future__ import annotations
 
-from typing import List
+from typing import Dict, List
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _row_hash(df: DataFrame) -> F.Column:
-    """Deterministic per-row content hash over all columns (JVM-side)."""
-    return F.xxhash64(*[F.col(c) for c in df.columns])
-
+from .misc import column_ref
 
 #: internal helper column names used by the truncation utilities; a
 #: user column with one of these names would produce an opaque
 #: AMBIGUOUS_REFERENCE mid-job, so reject it up front
-_RESERVED = ("__m", "__copy", "__rn", "__salt", "__cnt", "__dr")
+_RESERVED = ("__m", "__copy", "__rn", "__cnt", "__dr")
 
 
 def _check_reserved(df: DataFrame, op: str) -> None:
@@ -63,11 +67,13 @@ def _check_reserved(df: DataFrame, op: str) -> None:
         )
 
 
+def _column_refs(df: DataFrame) -> Dict[str, Column]:
+    """One exact reference per column of ``df``, in column order."""
+    return {c: column_ref(df, c) for c in df.columns}
+
+
 def truncate_large_groups(
-    df: DataFrame,
-    grouping_columns: List[str],
-    threshold: int,
-    salt_buckets: int = 32,
+    df: DataFrame, grouping_columns: List[str], threshold: int
 ) -> DataFrame:
     """Keep at most ``threshold`` hash-chosen rows per group.
 
@@ -84,30 +90,28 @@ def truncate_large_groups(
     by at most one element (stability factor 2 as before, empirically
     fuzzed in tests/test_property_exact.py).
 
-    Skew-safe three-phase plan: a map-side-combined count aggregate
-    collapses duplicates before its shuffle and regenerates
-    ``min(m, threshold)`` numbered copies per distinct row (rows are
-    fully described by their columns, so this is the same multiset —
-    and cheaper than a window, which would shuffle and sort every
-    input row); then a local pass keeps the top ``threshold`` rows per
-    (group, salt) — the salt is the input partition id, so a hot key
-    is ranked by up to ``salt_buckets`` tasks instead of collapsing
-    onto one — and the exact pass ranks the at most
-    ``threshold * salt_buckets`` survivors per group.  The local pass is sound because the order
-    key is fixed per row before it runs: a group's true global
-    top-``threshold`` is contained in the local top-``threshold`` of
-    whichever salt bucket each row landed in.  ``salt_buckets=1`` (or
-    0) disables the local pass.  The result is multiset-deterministic
-    and partition-independent: identical rows are interchangeable, so
-    the arbitrary copy-index assignment among them never changes the
-    released multiset.
+    The plan: a map-side-combined count aggregate collapses duplicates
+    before its shuffle and regenerates ``min(m, threshold)`` numbered
+    copies per distinct row (rows are fully described by their
+    columns, so this is the same multiset — and cheaper than a window,
+    which would shuffle and sort every input row); then one
+    ``row_number`` window per group, ordered by the hash with the row
+    and copy index as tiebreak, and a filter on the rank.  Spark runs
+    that filter as a ``WindowGroupLimit`` with a partial pass before
+    the exchange while ``threshold`` is at or under
+    ``spark.sql.optimizer.windowGroupLimitThreshold``, which is the
+    hot-key guard (see the module docstring).  The result is
+    multiset-deterministic and partition-independent: identical rows
+    are interchangeable, so the arbitrary copy-index assignment among
+    them never changes the released multiset.
     """
     if threshold < 0:
         raise ValueError("threshold must be >= 0")
     if threshold == 0:
         return df.limit(0)
     _check_reserved(df, "truncate_large_groups")
-    cols = df.columns
+    refs = _column_refs(df)
+    cols = list(refs.values())
     # copy indexes from a count aggregate, not a window: rows are fully
     # described by their columns, so regenerating min(m, threshold)
     # numbered copies per distinct row is the same multiset — and the
@@ -117,61 +121,17 @@ def truncate_large_groups(
     # along: Spark groupBy keys equate -0.0 with 0.0 (and all NaN bit
     # patterns), so a float -0.0 is released as 0.0 — values Spark
     # already treats as equal in every comparison, join, and group
-    df = (
-        df.groupBy(*cols)
-        .agg(F.count(F.lit(1)).alias("__m"))
-        .select(
-            *cols,
-            F.explode(
-                F.sequence(
-                    F.lit(1), F.least(F.col("__m"), F.lit(threshold))
-                )
-            ).alias("__copy"),
-        )
+    counted = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("__m"))
+    copies = F.least(counted["__m"], F.lit(threshold))
+    numbered = counted.select(
+        *cols, F.explode(F.sequence(F.lit(1), copies)).alias("__copy")
     )
-    order_key = F.xxhash64(*[F.col(c) for c in cols], F.col("__copy"))
-    tiebreak = [F.col(c) for c in cols] + [F.col("__copy")]
-    # r18 (guide §2.4): Spark 3.5+/4 plans a rank-limit filter as
-    # WindowGroupLimit with a PARTIAL map-side pass BEFORE the window's
-    # exchange (SPARK-37099) whenever the limit is at or under
-    # spark.sql.optimizer.windowGroupLimitThreshold — each input
-    # partition then ships at most ``threshold`` rows per group, which
-    # is exactly the hot-key protection the manual salted pass provides
-    # (the physical input partition IS the salt), without the salted
-    # window's extra full Exchange+Sort.  Keep the manual pass only
-    # when the engine's optimization cannot fire (threshold above the
-    # conf, or the rewrite disabled with -1): the released multiset is
-    # identical either way, since a local pass only pre-filters a
-    # superset of every group's global top-``threshold``.
-    if salt_buckets and salt_buckets > 1:
-        try:
-            _wgl = int(
-                df.sparkSession.conf.get(
-                    "spark.sql.optimizer.windowGroupLimitThreshold", "1000"
-                )
-            )
-        except (TypeError, ValueError):  # pragma: no cover
-            _wgl = 1000
-        if _wgl != -1 and threshold <= _wgl:
-            salt_buckets = 0
-    if salt_buckets and salt_buckets > 1:
-        salted = df.withColumn(
-            "__salt", (F.spark_partition_id() % salt_buckets).cast("int")
-        )
-        w_local = Window.partitionBy(*grouping_columns, "__salt").orderBy(
-            order_key, *tiebreak
-        )
-        df = (
-            salted.withColumn("__rn", F.row_number().over(w_local))
-            .filter(F.col("__rn") <= threshold)
-            .drop("__rn", "__salt")
-        )
-    w = Window.partitionBy(*grouping_columns).orderBy(order_key, *tiebreak)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= threshold)
-        .select(*cols)
+    copy = numbered["__copy"]
+    w = Window.partitionBy(*[refs[c] for c in grouping_columns]).orderBy(
+        F.xxhash64(*cols, copy), *cols, copy
     )
+    ranked = numbered.withColumn("__rn", F.row_number().over(w))
+    return ranked.filter(ranked["__rn"] <= threshold).select(*cols)
 
 
 def drop_large_groups(
@@ -183,13 +143,10 @@ def drop_large_groups(
     if threshold == 0:
         return df.limit(0)
     _check_reserved(df, "drop_large_groups")
-    cols = df.columns
-    w = Window.partitionBy(*grouping_columns)
-    return (
-        df.withColumn("__cnt", F.count(F.lit(1)).over(w))
-        .filter(F.col("__cnt") <= threshold)
-        .select(*cols)
-    )
+    refs = _column_refs(df)
+    w = Window.partitionBy(*[refs[c] for c in grouping_columns])
+    counted = df.withColumn("__cnt", F.count(F.lit(1)).over(w))
+    return counted.filter(counted["__cnt"] <= threshold).select(*refs.values())
 
 
 def limit_keys_per_group(
@@ -208,15 +165,9 @@ def limit_keys_per_group(
     if threshold == 0:
         return df.limit(0)
     _check_reserved(df, "limit_keys_per_group")
-    cols = df.columns
-    key_hash = F.xxhash64(
-        *[F.col(c) for c in grouping_columns + key_columns]
-    )
-    w = Window.partitionBy(*grouping_columns).orderBy(
-        key_hash, *[F.col(c) for c in key_columns]
-    )
-    return (
-        df.withColumn("__dr", F.dense_rank().over(w))
-        .filter(F.col("__dr") <= threshold)
-        .select(*cols)
-    )
+    refs = _column_refs(df)
+    groups = [refs[c] for c in grouping_columns]
+    keys = [refs[c] for c in key_columns]
+    w = Window.partitionBy(*groups).orderBy(F.xxhash64(*groups, *keys), *keys)
+    ranked = df.withColumn("__dr", F.dense_rank().over(w))
+    return ranked.filter(ranked["__dr"] <= threshold).select(*refs.values())
