@@ -248,6 +248,41 @@ class TestSurfaceParity:
         )
         assert abc2.privacy_function(1) == 3
 
+    @pytest.mark.parametrize("factory", ["average", "variance"])
+    @pytest.mark.parametrize("delta", ["0", "1/100000"])
+    def test_fused_moments_approxdp_privacy(self, factory, delta):
+        """Average and variance run one FusedMomentsMeasurement under
+        the core measure and reach ApproxDP through the shared
+        converters: (eps, 0) for delta = 0, Bun-Steinke
+        ``rho + 2 sqrt(rho ln(1/delta))`` for delta > 0, with the
+        requested budget met exactly."""
+        import sympy as sp
+
+        from tumult_core_spark.measures import ApproxDP
+        from tumult_core_spark.measurements import aggregations
+        from tumult_core_spark.measurements.converters import (
+            PureDPToApproxDP,
+            RhoZCDPToApproxDP,
+        )
+
+        create = getattr(aggregations, f"create_{factory}_measurement")
+        m = create(
+            v_domain(), SymmetricDifference(), ApproxDP(), 1, (1, delta),
+            "x", 0, 200,
+        )
+        d = ExactNumber(delta)
+        assert m.privacy_function(1) == (ExactNumber(1), d)
+        if d == 0:
+            assert isinstance(m, PureDPToApproxDP)
+            assert m.privacy_function(2) == (ExactNumber(2), d)
+            return
+        assert isinstance(m, RhoZCDPToApproxDP)
+        log_inv = sp.log(1 / d.expr)
+        rho = (sp.sqrt(log_inv + 1) - sp.sqrt(log_inv)) ** 2
+        # SymmetricDifference d_in = 2 doubles every sensitivity: 4 rho
+        eps2 = 4 * rho + 2 * sp.sqrt(4 * rho * log_inv)
+        assert m.privacy_function(2) == (ExactNumber(eps2), d)
+
     def test_average_keep_intermediates(self, spark, values):
         from tumult_core_spark.measurements.aggregations import (
             create_average_measurement,
@@ -1200,7 +1235,6 @@ class TestFreezeBranchContracts:
 
     def test_one_row_per_group_release(self, spark):
         m = self._apply_in_pandas(1)
-        assert m.release_rows(self._gdf(spark)) == 2
         assert m(self._gdf(spark)).count() == 2
 
     def test_multi_row_release_violates_default_contract(self, spark):
@@ -1212,7 +1246,6 @@ class TestFreezeBranchContracts:
 
     def test_declared_rows_per_group(self, spark):
         m = self._apply_in_pandas(2, rows_per_group=2)
-        assert m.release_rows(self._gdf(spark)) == 4
         assert m(self._gdf(spark)).count() == 4
 
     def test_partition_selection_small_is_one_driver_release(
@@ -1279,24 +1312,6 @@ class TestFreezeBranchContracts:
         assert len(got) <= 2 and seen["known_rows"] == 2
         assert {g for g, _ in got} <= {"a1", "a2"}
 
-    def test_svt_release_rows_is_group_count(self, spark):
-        from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
-
-        dom = SparkDataFrameDomain({"g": STR, "rank": INT, "cnt": INT})
-        m = SparseVectorPrefixSums(
-            dom, "cnt", "rank", alpha=0, grouping_columns=["g"]
-        )
-        sdf = spark.createDataFrame(
-            [("a", r, 10) for r in range(5)] + [("b", r, 10) for r in range(5)],
-            "g string, rank long, cnt long",
-        )
-        assert m.release_rows(sdf) == 2
-        assert m(sdf).count() == 2
-
-        m_flat = SparseVectorPrefixSums(dom, "cnt", "rank", alpha=0)
-        assert m_flat.release_rows(sdf) == 1
-        assert m_flat(sdf).count() == 1
-
     def test_partition_selection_preserves_large_int64_and_null_keys(
         self, spark
     ):
@@ -1322,13 +1337,14 @@ class TestFreezeBranchContracts:
         assert got == {(big, 3), (None, 2)}, got
 
     def test_svt_call_preserves_caller_cache(self, spark):
-        """Regression: SVT's internal persist/unpersist must not drop a
-        cache entry the CALLER owns on the same input."""
+        """Regression: an SVT release must not drop a cache entry the
+        CALLER owns on the same input."""
         from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
 
         dom = SparkDataFrameDomain({"g": STR, "rank": INT, "cnt": INT})
         m = SparseVectorPrefixSums(
-            dom, "cnt", "rank", alpha=0, grouping_columns=["g"]
+            dom, "cnt", "rank", alpha=0, grouping_columns=["g"],
+            known_input_rows=5,
         )
         sdf = spark.createDataFrame(
             [("a", r, 10) for r in range(5)], "g string, rank long, cnt long"
@@ -1413,10 +1429,11 @@ class TestFreezeBranchContracts:
             assert out.count() == 3
 
     def test_internal_persists_are_released(self, spark, monkeypatch):
-        """Partition selection's large path and SVT's distributed path
-        persist a relation for the call only: repeated releases leave
-        no persistent RDD behind, and a cache the caller made on the
-        same plan beforehand survives the call."""
+        """Partition selection's large path persists a relation for the
+        call only, and SVT's executor placement persists nothing:
+        repeated releases leave no persistent RDD behind, and a cache
+        the caller made on the same plan beforehand survives the
+        call."""
         from pyspark import StorageLevel
 
         from tumult_core_spark.measurements.spark import (
@@ -1437,10 +1454,11 @@ class TestFreezeBranchContracts:
             SparkDataFrameDomain({"g": STR}), threshold=2, alpha=0
         )
         sel_in = spark.createDataFrame([("a1",)] * 3 + [("a2",)], "g string")
-        # no known_input_rows: SVT's distributed path
+        # 10 input rows > 1: SVT runs in its grouped pandas stage
         svt = SparseVectorPrefixSums(
             SparkDataFrameDomain({"g": STR, "rank": INT, "cnt": INT}),
             "cnt", "rank", alpha=0, grouping_columns=["g"],
+            known_input_rows=10,
         )
         svt_in = spark.createDataFrame(
             [(g, r, 10) for g in ("a", "b") for r in range(5)],

@@ -69,9 +69,8 @@ def test_grouped_count_is_partial_aggregated(spark, lineitem):
     m = create_count_measurement(
         dom, SymmetricDifference(), PureDP(), 1, 1, groupby_transformation=gb
     )
-    # inspect the pre-sanitize plan (sanitize materializes)
-    agged = m.measurement.call_unsanitized(m.transformation(lineitem))
-    plan = plan_of(agged)
+    # inspect the pre-noise aggregate (the release collects or materializes)
+    plan = plan_of(m.transformation(lineitem))
     assert plan.count("HashAggregate") >= 2  # partial + final
     # the keys fill-join runs as a broadcast hash join, not SMJ/NLJ
     assert "BroadcastHashJoin" in plan
@@ -1184,80 +1183,184 @@ def test_driver_side_release_freeze_matches_executor_path(spark, lineitem):
         bad(counted)
 
 
-def test_svt_driver_release_matches_distributed_path(spark):
-    """r18: SparseVectorPrefixSums with a declared ``known_input_rows``
-    (the bounds factory's public (#keys) x (#ranks) grid) releases
-    DRIVER-side over one collected Arrow table.  Gates: (a) alpha=0
-    outputs identical to the distributed path, same schema, grouped
-    and ungrouped; (b) the frozen plan is a LocalTableScan with no
-    Window/Exchange/ArrowEvalPython; (c) exceeding the declared bound
-    raises; (d) no bound / oversized bound / nulls / duplicate
-    (group, rank) pairs fall back to the distributed path pre-draw."""
-    from tumult_core_spark.domains import (
-        SparkIntegerColumnDescriptor,
-        SparkStringColumnDescriptor,
-    )
+_SVT_CASES = {
+    # (Spark schema, rows, grouping columns, expected (keys..., rank))
+    "grouped": (
+        "g string, rank int, cnt bigint",
+        [("a", r, c) for r, c in [(0, 1), (1, 4), (2, 10), (3, 0)]]
+        + [("b", r, c) for r, c in [(0, 10), (1, 0), (2, 0), (3, 1)]]
+        + [("c", r, c) for r, c in [(0, 20), (1, 1)]],
+        ["g"],
+        [("a", 2), ("b", 3), ("c", 0)],
+    ),
+    "ungrouped": (
+        "rank int, cnt bigint",
+        [(3, 0), (0, 1), (2, 10), (1, 4)],
+        [],
+        [(2,)],
+    ),
+    # 2^53 + 1 has no float64 twin, and a null key next to it would
+    # widen a pandas int64 key column to float64
+    "bigint_and_null_keys": (
+        "k bigint, rank int, cnt bigint",
+        [((1 << 53) + 1, r, c) for r, c in [(0, 1), (1, 4), (2, 10)]]
+        + [(None, r, c) for r, c in [(0, 10), (1, 0), (2, 1)]]
+        + [((1 << 53), r, c) for r, c in [(0, 0), (1, 0), (2, 5)]],
+        ["k"],
+        [((1 << 53) + 1, 2), (None, 2), ((1 << 53), 2)],
+    ),
+}
+
+
+def _svt(spark, case, **kw):
+    """(SparseVectorPrefixSums at alpha=0, its input) for one case of
+    :data:`_SVT_CASES`, bounded by the input's exact row count."""
     from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
-    from tumult_core_spark.utils.misc import SMALL_RELEASE_ROWS
 
-    rows = [
-        (g, r, c)
-        for g in ("a", "b")
-        for r, c in [(0, 1), (1, 4), (2, 10), (3, 0)]
-    ]
-    data = spark.createDataFrame(rows, "g string, rank int, cnt bigint")
-    dom = SparkDataFrameDomain(
-        {
-            "g": SparkStringColumnDescriptor(),
-            "rank": SparkIntegerColumnDescriptor(size=32),
-            "cnt": SparkIntegerColumnDescriptor(size=64),
-        }
+    ddl, rows, gcols, _ = _SVT_CASES[case]
+    data = spark.createDataFrame(rows, ddl)
+    dom = SparkDataFrameDomain.from_spark_schema(data.schema)
+    kw.setdefault("known_input_rows", len(rows))
+    m = SparseVectorPrefixSums(
+        dom, "cnt", "rank", alpha=0, grouping_columns=gcols, **kw
     )
+    return m, data
 
-    def make(**kw):
-        return SparseVectorPrefixSums(
-            dom, "cnt", "rank", alpha=0, grouping_columns=["g"], **kw
-        )
 
-    driver_out = make(known_input_rows=8)(data)
+def _force_executor_placement(monkeypatch):
+    from tumult_core_spark.utils import misc
+
+    monkeypatch.setattr(misc, "SMALL_RELEASE_ROWS", 1)
+
+
+def _jobs_of(spark, fn):
+    """Run ``fn`` under a fresh job group; return (result, #jobs)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("case", list(_SVT_CASES))
+def test_svt_driver_and_executor_placements_match(spark, monkeypatch, case):
+    """SVT runs one pick function, on the driver at a bound within the
+    small-release gate and in one grouped pandas stage above it.  At
+    alpha=0 both placements release the same rows with the same
+    schema, and key columns come back exactly as they went in (a
+    bigint key above 2^53 next to a null key included)."""
+    expected = sorted(_SVT_CASES[case][3], key=repr)
+    m, data = _svt(spark, case)
+
+    driver_out = m(data)
     plan = plan_of(driver_out)
     assert "LocalTableScan" in plan
-    for node in ("Window", "Exchange", "ArrowEvalPython"):
+    for node in ("Window", "Exchange", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert node not in plan, plan
-    dist_out = make()(data)
-    assert sorted(driver_out.collect()) == sorted(dist_out.collect())
-    assert driver_out.schema == dist_out.schema
+    assert sorted(map(tuple, driver_out.collect()), key=repr) == expected
 
-    # ungrouped parity
-    flat = spark.createDataFrame(
-        [(0, 1), (1, 4), (2, 10), (3, 0)], "rank int, cnt bigint"
+    _force_executor_placement(monkeypatch)
+    exec_out = m(data)
+    assert "LocalTableScan" not in plan_of(exec_out)
+    assert sorted(map(tuple, exec_out.collect()), key=repr) == expected
+    assert exec_out.schema == driver_out.schema
+
+
+def test_svt_bound_is_required_and_enforced(spark):
+    from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
+
+    m, data = _svt(spark, "grouped", known_input_rows=9)
+    with pytest.raises(TypeError):
+        SparseVectorPrefixSums(m.input_domain, "cnt", "rank", alpha=0)
+    # a bound the input exceeds raises loudly (a caller bug)
+    with pytest.raises(AssertionError, match="known_input_rows"):
+        _svt(spark, "grouped", known_input_rows=3)[0](data)
+
+
+_SVT_BAD_INPUTS = {
+    "null_count": ([("a", 0, None), ("a", 1, 3)], "null rank or count"),
+    "null_rank": ([("a", None, 1), ("a", 1, 3)], "null rank or count"),
+    "duplicate_rank": (
+        [("a", 0, 1), ("a", 0, 2), ("b", 0, 1)],
+        r"duplicate \(group, rank\)",
+    ),
+}
+
+
+@pytest.mark.parametrize("bad", list(_SVT_BAD_INPUTS))
+@pytest.mark.parametrize("placement", ["driver", "executor"])
+def test_svt_rejects_bad_input_before_any_draw(spark, monkeypatch, placement, bad):
+    """A null count or rank, or a duplicate (group, rank) pair, raises
+    ValueError before the noise is drawn, in both placements.  On the
+    executors the ValueError reaches the caller wrapped in Spark's
+    PythonException, and the release job writes nothing."""
+    from pyspark.errors import PythonException
+
+    import tumult_core_spark.measurements.spark as spark_meas
+    from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
+
+    rows, msg = _SVT_BAD_INPUTS[bad]
+    data = spark.createDataFrame(rows, "g string, rank int, cnt bigint")
+    dom = SparkDataFrameDomain.from_spark_schema(data.schema)
+    m = SparseVectorPrefixSums(
+        dom, "cnt", "rank", alpha=2, grouping_columns=["g"],
+        known_input_rows=len(rows),
     )
-    fdom = SparkDataFrameDomain(
+    if placement == "driver":
+
+        def no_draw(*a, **kw):  # pragma: no cover - failure path
+            raise AssertionError("noise drawn for a rejected input")
+
+        monkeypatch.setattr(spark_meas, "AddNoiseToSeries", no_draw)
+        with pytest.raises(ValueError, match=msg):
+            m(data)
+    else:
+        _force_executor_placement(monkeypatch)
+        with pytest.raises(PythonException, match=msg) as err:
+            m(data)
+        assert "ValueError" in str(err.value)
+
+
+def test_svt_jobs_per_release(spark, monkeypatch):
+    """One Spark job per SVT release on the driver (the bounded
+    collect); at most three in the executor placement (the grouped
+    pandas stage, the rand-keyed rebalance and the parquet write).  The
+    windowed plan this replaced ran 12 jobs per release above the
+    gate."""
+    m, data = _svt(spark, "grouped")
+    for _ in range(2):
+        _, jobs = _jobs_of(spark, lambda: m(data))
+        assert jobs == 1, jobs
+    _force_executor_placement(monkeypatch)
+    for _ in range(2):
+        _, jobs = _jobs_of(spark, lambda: m(data))
+        assert jobs <= 3, jobs
+
+
+def test_svt_driver_group_ids_follow_spark_grouping():
+    """The driver placement numbers groups by comparing key values as
+    Python objects: every null is one group, every NaN is one group,
+    -0.0 equals 0.0, array keys group by value, and a bigint above
+    2^53 stays apart from its float64 neighbour."""
+    import pyarrow as pa
+
+    from tumult_core_spark.measurements.spark import _group_ids
+
+    big = (1 << 53) + 1
+    keys = pa.table(
         {
-            "rank": SparkIntegerColumnDescriptor(size=32),
-            "cnt": SparkIntegerColumnDescriptor(size=64),
+            "i": pa.array([big, big - 1, None, big, None], pa.int64()),
+            "f": pa.array([float("nan"), 0.0, 1.0, float("nan"), 1.0]),
+            "a": pa.array([[1], [1], [2, 3], [1], [2, 3]], pa.list_(pa.int64())),
         }
     )
-    fd = SparseVectorPrefixSums(fdom, "cnt", "rank", alpha=0, known_input_rows=4)(flat)
-    fx = SparseVectorPrefixSums(fdom, "cnt", "rank", alpha=0)(flat)
-    assert "LocalTableScan" in plan_of(fd)
-    assert fd.collect() == fx.collect()
-    assert fd.schema == fx.schema
-
-    # a declared bound the data exceeds raises loudly (caller bug)
-    with pytest.raises(AssertionError, match="known_input_rows"):
-        make(known_input_rows=3)(data)
-
-    # ineligible inputs return None from the driver branch, pre-draw
-    m = make(known_input_rows=8)
-    assert m._driver_release is not None
-    assert make(known_input_rows=SMALL_RELEASE_ROWS + 1)._driver_release(data) is None
-    assert make()._driver_release(data) is None
-    with_null = spark.createDataFrame(
-        [("a", 0, None), ("a", 1, 3)], "g string, rank int, cnt bigint"
-    )
-    assert make(known_input_rows=8)._driver_release(with_null) is None
-    dup = spark.createDataFrame(
-        [("a", 0, 1), ("a", 0, 2)], "g string, rank int, cnt bigint"
-    )
-    assert make(known_input_rows=8)._driver_release(dup) is None
+    assert _group_ids(keys).tolist() == [0, 1, 2, 0, 2]
+    zeros = pa.table({"f": pa.array([0.0, -0.0, None, None])})
+    assert _group_ids(zeros).tolist() == [0, 0, 1, 1]
+    assert _group_ids(keys.select([])).tolist() == [0] * 5

@@ -270,6 +270,32 @@ class TestExactColumnNames:
         assert out.columns == [key, "v.x", "w", "v.y"]
         assert out.count() == rows
 
+    @pytest.mark.parametrize("key", ["k", "k.a"])
+    @pytest.mark.parametrize("join_on_nulls", [False, True])
+    def test_public_join_stability(self, spark, key, join_on_nulls):
+        left, right = self._frames(spark, key)
+        dom = SparkDataFrameDomain({key: INT, "v.x": INT, "w": STR})
+        t = PublicJoin(
+            dom, SymmetricDifference(), right, join_on_nulls=join_on_nulls
+        )
+        assert t.stability_function(1) == 2  # key 2 appears twice
+        assert t(left).count() == 5
+
+    def test_public_join_filters_dotted_float_column(self, spark):
+        from tumult_core_spark.domains import SparkFloatColumnDescriptor
+
+        left, _ = self._frames(spark, "k")
+        pub = spark.createDataFrame(
+            [(1, 0.5), (2, float("nan")), (2, float("inf"))], "k long, `f.z` double"
+        )
+        pub_dom = SparkDataFrameDomain(
+            {"k": INT_N, "f.z": SparkFloatColumnDescriptor(size=64, allow_null=True)}
+        )
+        dom = SparkDataFrameDomain({"k": INT, "v.x": INT, "w": STR})
+        t = PublicJoin(dom, SymmetricDifference(), pub, public_df_domain=pub_dom)
+        assert t.stability_function(1) == 1
+        assert sorted(r["f.z"] for r in t(left).collect()) == [0.5] * 3
+
 
 class TestJoins:
     def test_public_join_natural(self, spark, kv):

@@ -238,7 +238,7 @@ class TestPrivacyValues:
         from tumult_core_spark.measurements.spark import SparseVectorPrefixSums
 
         d = SparkDataFrameDomain({"rank": INT, "count": INT})
-        m = SparseVectorPrefixSums(d, "count", "rank", alpha=2)
+        m = SparseVectorPrefixSums(d, "count", "rank", alpha=2, known_input_rows=1)
         assert m.privacy_function(1) == 2  # 4/alpha
         assert m.privacy_function(2) == 4
 

@@ -61,7 +61,7 @@ from .noise import (
     AddLaplaceNoise,
     AddNoiseToSeries,
 )
-from .spark import AddNoiseToColumn, noise_column
+from .spark import AddNoiseToColumn, release_noised_columns
 
 
 class NoiseMechanism(Enum):
@@ -371,13 +371,14 @@ def create_average_measurement(
                 )
             return df.select(*[F.col(f"`{c}`") for c in keys], avg)
 
+    core, eps_like, wrap = _route_measure(output_measure, d_out)
     m = FusedMomentsMeasurement(
-        input_domain, input_metric, output_measure, d_in, d_out,
+        input_domain, input_metric, core, d_in, eps_like,
         measure_column, lower_e, upper_e, include_squares=False,
         groupby_transformation=groupby_transformation,
         postprocess=post, noise_mechanism=noise_mechanism,
     )
-    return _assert_privacy(m, ExactNumber(d_in), d_out)
+    return _assert_privacy(wrap(m), ExactNumber(d_in), d_out)
 
 
 def create_variance_measurement(
@@ -459,13 +460,14 @@ def create_variance_measurement(
                 ]
             return df.select(*cols)
 
+    core, eps_like, wrap = _route_measure(output_measure, d_out)
     m = FusedMomentsMeasurement(
-        input_domain, input_metric, output_measure, d_in, d_out,
+        input_domain, input_metric, core, d_in, eps_like,
         measure_column, lower_e, upper_e, include_squares=True,
         groupby_transformation=groupby_transformation,
         postprocess=post, noise_mechanism=noise_mechanism,
     )
-    return _assert_privacy(m, ExactNumber(d_in), d_out)
+    return _assert_privacy(wrap(m), ExactNumber(d_in), d_out)
 
 
 def create_standard_deviation_measurement(
@@ -599,8 +601,11 @@ def create_bounds_measurement(
     total; bounds are ``(-2^rank, 2^rank)``.
 
     The bin-index map is a JVM SQL expression here (the reference uses
-    a Python row Map); everything up to the noise UDFs stays in
-    WholeStageCodegen.
+    a Python row Map); everything up to the SVT pick stays in
+    WholeStageCodegen.  The SVT input is the public grid of (#keys) x
+    (#ranks) rows, so its size is a public constant: it is SVT's
+    ``known_input_rows`` and alone decides whether the pick runs on the
+    driver (dp-sized key sets) or in one grouped pandas stage.
 
     zCDP / ApproxDP requests route through PureDP: ``eps =
     sqrt(2 rho)`` or ``(eps, 0)``.
@@ -671,8 +676,7 @@ def create_bounds_measurement(
 
     # JVM-local single-partition grid: a parallelized Python row list
     # costs one Python task per core per evaluation of the rank
-    # relation (utils.misc.local_rows_df), and this grid is evaluated
-    # by the 0-fill join, the SVT persist, and the release freeze
+    # relation (utils.misc.local_rows_df)
     rank_keys = local_rows_df(
         spark,
         [(i,) for i in range(lo_rank, hi_rank + 1)],
@@ -689,8 +693,7 @@ def create_bounds_measurement(
             raise ValueError("groupby_transformation does not match input")
         keys = gb.group_keys.crossJoin(rank_keys)
         group_cols = gb.groupby_columns
-        # public constant (#keys) x (#ranks): feeds the SVT
-        # driver-release gate below
+        # public constant (#keys) x (#ranks): SVT's input bound
         n_grid = gb.n_keys * n_ranks
 
     full_gb = GroupBy(derive.output_domain, input_metric, False, keys, n_keys=n_grid)
@@ -751,6 +754,10 @@ class FusedMomentsMeasurement(Measurement):
     loss is the sum of the per-statistic losses at their assigned
     budget shares.
 
+    ``output_measure`` is the core measure (PureDP or RhoZCDP) and
+    ``d_out`` its budget; an ApproxDP request wraps the measurement in
+    the converter ``_route_measure`` returns.
+
     ``postprocess(noisy_df_or_row) -> output`` shapes the final result
     (average / variance / stddev).
     """
@@ -770,12 +777,12 @@ class FusedMomentsMeasurement(Measurement):
         postprocess,
         noise_mechanism: Optional[NoiseMechanism] = None,
     ):
-        core, eps_like, _ = _route_measure(output_measure, d_out)
-        self._delta = (
-            ExactNumber(d_out[1]) if isinstance(output_measure, ApproxDP) else None
-        )
+        if not isinstance(output_measure, (PureDP, RhoZCDP)):
+            raise ValueError(
+                f"core measure must be PureDP or RhoZCDP: {output_measure}"
+            )
         n_stats = 3 if include_squares else 2
-        share = eps_like / n_stats
+        share = ExactNumber(d_out) / n_stats
         d_in_e = ExactNumber(d_in)
         lower_e, upper_e = ExactNumber(lower), ExactNumber(upper)
         # nulls would be skipped by sum() but counted by count(1),
@@ -787,8 +794,10 @@ class FusedMomentsMeasurement(Measurement):
         integral = isinstance(desc, SparkIntegerColumnDescriptor)
         mid = get_midpoint(lower_e, upper_e, integral)
         dev_lo, dev_hi = lower_e - mid, upper_e - mid
-        mechanism = noise_mechanism or _default_mechanism(core, integral=integral)
-        _check_mechanism_measure(mechanism, core)
+        mechanism = noise_mechanism or _default_mechanism(
+            output_measure, integral=integral
+        )
+        _check_mechanism_measure(mechanism, output_measure)
 
         gb = groupby_transformation
         if gb is not None and (
@@ -809,13 +818,13 @@ class FusedMomentsMeasurement(Measurement):
         stat_domain = NumpyIntegerDomain() if integral else NumpyFloatDomain()
         count_mechanism = (
             NoiseMechanism.GEOMETRIC
-            if isinstance(core, PureDP)
+            if isinstance(output_measure, PureDP)
             else NoiseMechanism.DISCRETE_GAUSSIAN
         )
         self._mechs = {
             s: _make_mechanism(
                 count_mechanism if s == "count" else mechanism,
-                calculate_noise_scale(stability * unit, share, core),
+                calculate_noise_scale(stability * unit, share, output_measure),
                 NumpyIntegerDomain() if s == "count" else stat_domain,
             )
             for s, unit in self._unit_sens.items()
@@ -825,8 +834,6 @@ class FusedMomentsMeasurement(Measurement):
         self.postprocess = postprocess
         self._integral = integral
         self._lower, self._upper, self._mid = lower_e, upper_e, mid
-        self._core = core
-        self._output_measure_outer = output_measure
 
     def _stability(self, d: ExactNumber) -> ExactNumber:
         if self.groupby is not None:
@@ -839,15 +846,6 @@ class FusedMomentsMeasurement(Measurement):
         for s, mech in self._mechs.items():
             unit = self._unit_sens[s]
             total = total + ExactNumber(mech.privacy_function(stability * unit))
-        if isinstance(self._output_measure_outer, ApproxDP):
-            if self._delta is None or self._delta == 0:
-                return (total, ExactNumber(0))
-            # core ran under zCDP: convert the summed rho back to
-            # (eps, delta) exactly as RhoZCDPToApproxDP does
-            if not total.is_finite or total == 0:
-                return (total, self._delta)
-            eps = total.expr + 2 * sp.sqrt(total.expr * sp.log(1 / self._delta.expr))
-            return (ExactNumber(eps), self._delta)
         return total
 
     def _agg_exprs(self):
@@ -881,28 +879,14 @@ class FusedMomentsMeasurement(Measurement):
         return exprs
 
     def __call__(self, data: DataFrame):
-        from ..utils import misc
-
         exprs = self._agg_exprs()
         if self.groupby is not None:
             gdf = self.groupby(data)
             # one row per public key, every statistic 0-filled
             joined = gdf.agg(*exprs, fill_value=0)
             mechs = [(s, AddNoiseToSeries(m)) for s, m in self._mechs.items()]
-            known_rows = gdf.n_keys
-            # small public-key bound: draw all three statistics' noise
-            # driver-side over the pre-noise aggregate — one job, no
-            # ArrowEvalPython stages (utils.misc.freeze_noised_release);
-            # large key sets noise on the executors
-            if known_rows <= misc.SMALL_RELEASE_ROWS:
-                return self.postprocess(
-                    misc.freeze_noised_release(joined, mechs, known_rows)
-                )
-            noisy = joined.withColumns(
-                {s: noise_column(m)(joined[s]) for s, m in mechs}
-            )
             return self.postprocess(
-                misc.sanitize_df(noisy, known_rows=known_rows)
+                release_noised_columns(joined, mechs, gdf.n_keys)
             )
         row = data.agg(*exprs).first()
         stats = {}

@@ -5,7 +5,7 @@ The privacy-critical physical details (reference
 
 * every output is **frozen exactly once**, on a branch picked by a
   row bound the measurement knows before any draw: the public-key
-  count for grouped releases, the input's group count for SVT, the
+  count for grouped releases, the public input grid for SVT, the
   pre-noise candidate count for partition selection.  Small releases
   leave through ``utils/misc.freeze_small`` (a canonical sort of the
   collected release and a local relation), either after a driver-side
@@ -14,16 +14,20 @@ The privacy-critical physical details (reference
   ``sanitize_df``'s small branch.  Large ones take ``sanitize_df``'s
   ``rand()``-keyed shuffle and single parquet write.  No branch
   observes the size of a noised relation;
-* every executor-side draw goes through :func:`noise_column`, the one
-  place that builds a noise UDF; it always marks the UDF
+* every executor-side draw happens either in :func:`noise_column`, the
+  one place that builds a noise UDF (always marked
   ``asNondeterministic()``, so Catalyst never re-executes, reorders,
-  or pushes a draw down.
+  or pushes a draw down), or in one grouped pandas stage
+  (``applyInPandas``: SVT's :func:`svt_pick`, :class:`ApplyInPandas`)
+  frozen by one parquet write.
 """
 
 from __future__ import annotations
 
-from typing import Any, Callable, Optional
+from typing import Any, Callable, List, Optional, Tuple
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -46,7 +50,7 @@ from ..metrics import (
 from ..utils.distributions import double_sided_geometric_cmf_exact
 from ..utils import misc
 from ..utils.grouped_dataframe import GroupedDataFrame
-from ..utils.misc import persisted, sanitize_df
+from ..utils.misc import column_ref, persisted, sanitize_df
 from .noise import AddGeometricNoise, AddNoiseToSeries
 
 
@@ -67,27 +71,36 @@ def noise_column(mech: AddNoiseToSeries) -> Callable[[Column], Column]:
     return F.pandas_udf(lambda s: mech(s), returnType=out_type).asNondeterministic()
 
 
-class SparkMeasurement(Measurement):
-    """Base for DataFrame-emitting measurements: the unfrozen release
-    from ``call_unsanitized`` leaves through ``sanitize_df`` with the
-    subclass's noise-independent ``release_rows(data)`` bound."""
+def release_noised_columns(
+    data: DataFrame,
+    noise_specs: List[Tuple[str, AddNoiseToSeries]],
+    known_rows: int,
+) -> DataFrame:
+    """Release ``data`` with every ``(column, mechanism)`` of
+    ``noise_specs`` noised, frozen on the branch the public
+    ``known_rows`` bound picks before anything runs.
 
-    def call_unsanitized(self, data: Any) -> DataFrame:
-        raise NotImplementedError
+    At most ``SMALL_RELEASE_ROWS`` rows: the noise is drawn DRIVER-side
+    over the collected pre-noise relation
+    (:func:`~..utils.misc.freeze_noised_release`): one Spark job, no
+    ArrowEvalPython stage, no exchange.  Larger key sets noise on the
+    executors through :func:`noise_column` and freeze through
+    ``sanitize_df``'s parquet branch.
+    """
+    if known_rows <= misc.SMALL_RELEASE_ROWS:
+        return misc.freeze_noised_release(data, noise_specs, known_rows)
+    noisy = data.withColumns(
+        {c: noise_column(m)(column_ref(data, c)) for c, m in noise_specs}
+    )
+    return misc.sanitize_df(noisy, known_rows=known_rows)
 
-    def __call__(self, data: Any) -> DataFrame:
-        return sanitize_df(
-            self.call_unsanitized(data), known_rows=self.release_rows(data)
-        )
 
-
-class AddNoiseToColumn(SparkMeasurement):
+class AddNoiseToColumn(Measurement):
     """Add vectorized noise to one column of a grouped-aggregate DataFrame.
 
     Input metric is ``OnColumn(measure_column, SumOf|RootSumOfSquared(
     AbsoluteDifference()))`` — the metric produced by CountGrouped /
-    SumGrouped.  Small releases draw the noise driver-side; large ones
-    noise on the executors through :func:`noise_column`.
+    SumGrouped.  It releases through :func:`release_noised_columns`.
     """
 
     def __init__(
@@ -149,28 +162,12 @@ class AddNoiseToColumn(SparkMeasurement):
         return self.measurement.privacy_function(d_in)
 
     def __call__(self, data: DataFrame) -> DataFrame:
-        """The public row bound picks the path before anything runs.
-        At most ``SMALL_RELEASE_ROWS`` rows: the noise is drawn
-        DRIVER-side over the collected pre-noise aggregate
-        (:func:`~..utils.misc.freeze_noised_release`) — one Spark job,
-        no ArrowEvalPython stage, no exchange.  Larger key sets noise
-        on the executors in a pandas UDF and freeze through
-        ``sanitize_df``'s parquet branch."""
-        rows = self.known_release_rows
-        if rows > misc.SMALL_RELEASE_ROWS:
-            return sanitize_df(self.call_unsanitized(data), known_rows=rows)
-        return misc.freeze_noised_release(
-            data, [(self.measure_column, self.measurement)], rows
-        )
-
-    def call_unsanitized(self, data: DataFrame) -> DataFrame:
-        noise = noise_column(self.measurement)
-        return data.withColumn(
-            self.measure_column, noise(F.col(self.measure_column))
+        return release_noised_columns(
+            data, [(self.measure_column, self.measurement)], self.known_release_rows
         )
 
 
-class ApplyInPandas(SparkMeasurement):
+class ApplyInPandas(Measurement):
     """Run a pandas aggregation measurement on every group.
 
     The per-group function sees a pandas DataFrame (empty for public
@@ -203,17 +200,15 @@ class ApplyInPandas(SparkMeasurement):
     def privacy_function(self, d_in: Any) -> Any:
         return self.aggregation_function.privacy_function(d_in)
 
-    def release_rows(self, data: GroupedDataFrame) -> int:
-        # rows_per_group output rows per public group key: the bound is
-        # a property of the keys alone
-        return data.n_keys * self.rows_per_group
-
-    def call_unsanitized(self, data: GroupedDataFrame) -> DataFrame:
+    def __call__(self, data: GroupedDataFrame) -> DataFrame:
         agg = self.aggregation_function
-        return data.apply_in_pandas(agg, agg.output_spark_schema)
+        return sanitize_df(
+            data.apply_in_pandas(agg, agg.output_spark_schema),
+            known_rows=data.n_keys * self.rows_per_group,
+        )
 
 
-class GeometricPartitionSelection(SparkMeasurement):
+class GeometricPartitionSelection(Measurement):
     """DP discovery of frequent distinct rows.
 
     groupBy all columns -> count -> add two-sided geometric noise ->
@@ -342,19 +337,66 @@ class GeometricPartitionSelection(SparkMeasurement):
         return misc.freeze_small(tbl, schema)
 
 
-#: Spark simpleString types SVT's driver release accepts.  Its group
-#: keys round-trip through pandas (``groupby`` and ``duplicated``),
-#: where struct, list and map keys are unhashable; the release's null
-#: check keeps int64 keys from being coerced to float64 there.
-_DRIVER_RELEASE_TYPES = frozenset(
-    {
-        "tinyint", "smallint", "int", "bigint", "float", "double",
-        "string", "boolean", "date", "timestamp", "timestamp_ntz",
-    }
-)
+def svt_pick(
+    frame: pd.DataFrame, alpha: ExactNumber, threshold_fraction: float
+) -> np.ndarray:
+    """The SVT pick over the (group, rank, count) rows of ``frame``.
+
+    ``frame`` has the columns ``group`` (dense group ids ``0..n-1``),
+    ``rank`` and ``count``.  For every group the noisy total (geometric
+    noise at scale ``alpha/2``) sets the threshold
+    ``threshold_fraction * total``; the rank-ordered prefix sums get
+    geometric noise at scale ``alpha``, and the pick is the lowest rank
+    whose noisy prefix reaches the threshold, else the group's highest
+    rank.  Both mechanisms are invoked exactly once, each over the
+    vector of all groups in ``frame``.  Returns the picked rank of each
+    group, indexed by group id.
+
+    A null rank or count, or a duplicate (group, rank) pair, raises
+    ``ValueError`` before any draw.
+    """
+    if frame[["rank", "count"]].isna().to_numpy().any():
+        raise ValueError("SVT input holds a null rank or count")
+    if frame.duplicated(["group", "rank"]).any():
+        raise ValueError("SVT input holds a duplicate (group, rank) pair")
+    frame = frame.sort_values(["group", "rank"], kind="mergesort")
+    ids = frame["group"].to_numpy()
+    counts = frame.groupby(ids, sort=True)["count"]
+    totals = AddNoiseToSeries(AddGeometricNoise(alpha / 2))(counts.sum())
+    prefix = AddNoiseToSeries(AddGeometricNoise(alpha))(counts.cumsum())
+    thresholds = threshold_fraction * totals.to_numpy().astype(np.float64)
+    crossed = prefix.to_numpy() >= thresholds[ids]
+    # rows are sorted by rank within each group: the first crossing row
+    # holds the lowest crossing rank, the group's last row its highest
+    at = np.arange(len(frame))
+    first_hit = pd.Series(np.where(crossed, at, len(frame))).groupby(ids).min()
+    last = pd.Series(at).groupby(ids).max()
+    pos = np.where(first_hit < len(frame), first_hit, last)
+    return frame["rank"].to_numpy()[pos]
 
 
-class SparseVectorPrefixSums(SparkMeasurement):
+def _group_ids(keys) -> np.ndarray:
+    """Dense per-row group ids over the columns of the Arrow table
+    ``keys``, numbered in order of first appearance.  Values are
+    compared as Python objects, so no key passes through a float64
+    column; equality is Spark's grouping equality (every null is one
+    group, every NaN is one group, ``-0.0`` equals ``0.0``), and array
+    and struct values compare by their ``repr``."""
+
+    def token(v):
+        if isinstance(v, float) and v != v:
+            return "NaN"
+        return repr(v) if isinstance(v, (list, dict)) else v
+
+    columns = [map(token, col.to_pylist()) for col in keys.columns]
+    rows = zip(*columns) if columns else [()] * keys.num_rows
+    ids: dict = {}
+    return np.fromiter(
+        (ids.setdefault(r, len(ids)) for r in rows), np.int64, keys.num_rows
+    )
+
+
+class SparseVectorPrefixSums(Measurement):
     """AboveThreshold / SVT over ranked per-group bin counts.
 
     For each group: compute the noisy total (geometric noise at scale
@@ -364,10 +406,15 @@ class SparseVectorPrefixSums(SparkMeasurement):
     threshold.  PureDP: ``privacy_function(d) = 4 d / alpha``
     (reference ``spark_measurements.py:590-736``).
 
-    Physical plan: one windowed prefix sum partitioned by group (the
-    input here is already a tiny bin-count relation, <=201 rows per
-    group), one per-group aggregate for totals joined back, noise via
-    nondeterministic pandas UDFs, then a min() pick per group.
+    One pick implementation, :func:`svt_pick`, runs in one of two
+    places, chosen from the public ``known_input_rows`` bound alone:
+    at most ``SMALL_RELEASE_ROWS`` input rows, on the driver over one
+    bounded collect of the input (one Spark job), frozen by
+    ``freeze_small``; above it, once per group in one
+    ``groupBy(...).applyInPandas`` stage, frozen by ``sanitize_df``'s
+    parquet write.  The input is read once either way, and key columns
+    come back exactly as they went in (null and 64-bit keys included).
+    One row is released per group present in the input.
     """
 
     def __init__(
@@ -378,17 +425,14 @@ class SparseVectorPrefixSums(SparkMeasurement):
         alpha,
         grouping_columns=None,
         threshold_fraction: float = 0.95,
-        known_input_rows: Optional[int] = None,
+        *,
+        known_input_rows: int,
     ):
-        """``known_input_rows``: a-priori upper bound on the bin-count
-        input's TOTAL row count when the caller knows one — for the
-        bounds factory the input is the public rank grid 0-fill-joined
-        per public group key, so the bound is (#ranks) x (#keys), a
-        public constant.  With the bound declared (and unique ranks
-        per group, verified pre-draw), the whole SVT release runs
-        DRIVER-side over one collected Arrow table: one Spark job, no
-        window/join stages, no ArrowEvalPython stages, same mechanisms
-        invoked once each.  ``None`` keeps the distributed path."""
+        """``known_input_rows``: a public upper bound on the bin-count
+        input's total row count.  For the bounds factory the input is
+        the public rank grid 0-fill-joined per public group key, so the
+        bound is (#ranks) x (#keys).  It picks where the release runs;
+        an input with more rows raises ``AssertionError``."""
         from ..metrics import AbsoluteDifference as _AD
 
         grouping_columns = list(grouping_columns or [])
@@ -423,201 +467,43 @@ class SparseVectorPrefixSums(SparkMeasurement):
             return ExactNumber(float("inf"))
         return ExactNumber(4) * d / self.alpha
 
-    def release_rows(self, data: DataFrame) -> int:
-        # exactly one released row per group PRESENT in the input — a
-        # function of the data alone (no noise draw moves a group in or
-        # out of the release).
-        # The input here is a tiny bin-count relation by construction,
-        # so the extra distinct-count job is negligible.
-        if self.grouping_columns:
-            return data.select(*self.grouping_columns).distinct().count()
-        return 1
-
-    def _driver_release(self, data: DataFrame) -> Optional[DataFrame]:
-        """DRIVER-side SVT release over one collected Arrow table.
-
-        Eligible when the caller declared ``known_input_rows`` (the
-        bounds factory's public (#ranks) x (#keys) grid) at or below
-        the small-release gate.  One Spark job (the bounded collect of
-        the pre-noise bin counts) replaces the distributed plan's
-        group-count job, totals-count job, window, join, REBALANCE
-        exchange, and two ArrowEvalPython stages.  The release law is
-        identical: the same two :class:`AddNoiseToSeries` mechanisms
-        are invoked exactly once each over the same vectors (per-group
-        totals; rank-ordered prefix sums), and the pick rule — the
-        minimum rank whose noisy prefix crosses ``threshold_fraction``
-        of the noisy total, else the maximum rank — is unchanged.
-
-        Returns ``None`` (fall back to the distributed path, BEFORE
-        any draw) when: no bound / bound over the gate, a column type
-        outside :data:`_DRIVER_RELEASE_TYPES`, nulls in any used
-        column, or duplicate (group, rank) pairs.  The bound and every
-        bail-out condition are functions of the public grid or of the
-        pre-noise data alone, never of a draw, so the branch adds no
-        observation and each mechanism still runs exactly once.  The
-        release freezes through :func:`~..utils.misc.freeze_small`.
-        """
-        bound = self.known_input_rows
-        if bound is None or bound > misc.SMALL_RELEASE_ROWS:
-            return None
-        gcols = self.grouping_columns
-        rank, cnt = self.rank_column, self.count_column
-        used = [*gcols, rank, cnt]
-        narrow = data.select(*used)
-        for fld in narrow.schema.fields:
-            if fld.dataType.simpleString() not in _DRIVER_RELEASE_TYPES:
-                return None
-
-        import numpy as np
+    def __call__(self, data: DataFrame) -> DataFrame:
         import pyarrow as pa
 
+        gcols, rank, cnt = self.grouping_columns, self.rank_column, self.count_column
+        alpha, frac = self.alpha, float(self.threshold_fraction)
+        narrow = data.select(*[column_ref(data, c) for c in (*gcols, rank, cnt)])
+        out_schema = T.StructType([narrow.schema[c] for c in (*gcols, rank)])
+        bound = self.known_input_rows
+        if bound > misc.SMALL_RELEASE_ROWS:
+
+            def pick_group(key, pdf):
+                frame = pd.DataFrame(
+                    {"group": 0, "rank": pdf[rank], "count": pdf[cnt]}
+                )
+                picked = svt_pick(frame, alpha, frac)
+                # one key value per column, from Spark's key tuple: a
+                # null key never shares a pandas column with a bigint
+                # key, so no key is widened to float64
+                keys = {c: pd.Series([k]) for c, k in zip(gcols, key)}
+                return pd.DataFrame({**keys, rank: picked})
+
+            grouped = narrow.groupBy(*[column_ref(narrow, c) for c in gcols])
+            return sanitize_df(
+                grouped.applyInPandas(pick_group, out_schema), known_rows=bound
+            )
         head = misc._collect_bounded(narrow, bound, "known_input_rows")
-        if any(head.column(c).null_count for c in used):
-            return None
-        pdf = head.to_pandas()
-        # unique rank per (group,) row — guaranteed for the factory's
-        # 0-filled public grid, verified pre-draw for external callers
-        if pdf.duplicated(subset=[*gcols, rank]).any():
-            return None
-        pdf = pdf.sort_values([*gcols, rank], kind="mergesort").reset_index(
-            drop=True
+        ids = _group_ids(head.select(gcols))
+        frame = pd.DataFrame(
+            {
+                "group": ids,
+                "rank": head.column(rank).to_pandas(),
+                "count": head.column(cnt).to_pandas(),
+            }
         )
-
-        if gcols:
-            grouped = pdf.groupby(gcols, sort=True, dropna=False)
-            totals = grouped[cnt].sum()
-            prefix = grouped[cnt].cumsum()
-            group_codes = grouped.ngroup().to_numpy()
-        else:
-            import pandas as pd
-
-            totals = pd.Series([pdf[cnt].sum()])
-            prefix = pdf[cnt].cumsum()
-            group_codes = np.zeros(len(pdf), dtype=np.int64)
-
-        total_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
-        prefix_mech = AddNoiseToSeries(AddGeometricNoise(self.alpha))
-        noisy_totals = total_mech(totals)
-        noisy_prefix = prefix_mech(prefix).to_numpy()
-        thresholds = (
-            float(self.threshold_fraction) * noisy_totals.to_numpy().astype("float64")
+        picked = svt_pick(frame, alpha, frac)
+        first_rows = np.unique(ids, return_index=True)[1]
+        tbl = head.take(first_rows).select(gcols).append_column(
+            rank, pa.array(picked, type=head.schema.field(rank).type)
         )
-        ranks = pdf[rank].to_numpy()
-        crossed = noisy_prefix >= thresholds[group_codes]
-        n_groups = len(thresholds)
-        picked = np.empty(n_groups, dtype=ranks.dtype)
-        for g in range(n_groups):
-            mask = group_codes == g
-            hits = ranks[mask][crossed[mask]]
-            picked[g] = hits.min() if hits.size else ranks[mask].max()
-
-        out_fields = [narrow.schema[c] for c in gcols] + [narrow.schema[rank]]
-        out_schema = T.StructType(out_fields)
-        arrays = []
-        if gcols:
-            key_rows = totals.index
-            for i, c in enumerate(gcols):
-                vals = (
-                    key_rows.get_level_values(i)
-                    if len(gcols) > 1
-                    else key_rows
-                )
-                arrays.append(
-                    pa.array(list(vals), type=head.schema.field(c).type)
-                )
-        arrays.append(pa.array(picked, type=head.schema.field(rank).type))
-        tbl = pa.table(arrays, names=[*gcols, rank])
         return misc.freeze_small(tbl, out_schema)
-
-    def __call__(self, data: DataFrame) -> DataFrame:
-        """Sanitized release with the input persisted for the call.
-
-        The bin-count input plan is referenced four times per release —
-        the group-count job (``release_rows``), the totals size-gate
-        count, and twice inside the freeze job (the totals side and the
-        prefix side of the join) — and the plan BEHIND it is typically
-        a full scan+aggregate of raw data (``create_bounds_measurement``
-        bins the measure column upstream).  The input itself is tiny by
-        construction (<= 201 bins per group), so persisting it for the
-        duration of the call cuts four upstream evaluations to one at
-        no memory risk; the release is already frozen when ``sanitize_df``
-        returns, so the unpersist cannot unfreeze anything.
-
-        Measured trade (sf0.1 bounds workload, idle 32-core box): the
-        persist costs ~0.15 s of constant cache/job overhead per
-        release (min 1.07 s vs 0.89 s unpersisted) while replacing
-        three additional full scans of the upstream plan with cache
-        reads — a small loss at 600k rows, the only sane plan when the
-        upstream is a 100 TB scan+aggregate.
-
-        With ``known_input_rows`` declared (r18), the whole release
-        instead runs driver-side over ONE collected Arrow table — see
-        :meth:`_driver_release`; ineligible inputs keep the persisted
-        distributed path below unchanged.
-        """
-        frozen = self._driver_release(data)
-        if frozen is not None:
-            return frozen
-        with persisted(data):
-            return super().__call__(data)
-
-    def call_unsanitized(self, data: DataFrame) -> DataFrame:
-        from pyspark.sql import Window
-
-        gcols = self.grouping_columns
-        rank, cnt = self.rank_column, self.count_column
-        frac = self.threshold_fraction
-
-        noise_total = noise_column(
-            AddNoiseToSeries(AddGeometricNoise(self.alpha / 2))
-        )
-        noise_prefix = noise_column(AddNoiseToSeries(AddGeometricNoise(self.alpha)))
-
-        # per-group noisy totals (one noise draw per group)
-        agg_exprs = [F.sum(cnt).alias("__total")]
-        if gcols:
-            totals = data.groupBy(*gcols).agg(*agg_exprs)
-            # size-gate the per-group totals broadcast: group count is
-            # unbounded, so count the PRE-noise aggregate (no released
-            # draw depends on it) and fall back to a shuffle join for
-            # huge group sets instead of an unbounded broadcast
-            n_groups = totals.count()
-        else:
-            totals = data.agg(*agg_exprs)
-            n_groups = 1
-        totals = totals.withColumn(
-            "__noisy_threshold",
-            (F.lit(frac) * noise_total(F.col("__total"))).cast("double"),
-        ).drop("__total")
-
-        w = (
-            Window.partitionBy(*gcols).orderBy(rank)
-            if gcols
-            else Window.partitionBy().orderBy(rank)
-        )
-        prefixed = data.withColumn(
-            "__prefix", noise_prefix(F.sum(cnt).over(w).cast("long"))
-        )
-        from tumult_core_spark.utils.scale import broadcast_below
-
-        totals_hinted = broadcast_below(
-            totals, n_groups, est_row_bytes=32 * len(gcols) + 48
-        )
-        if gcols:
-            joined = prefixed.join(totals_hinted, on=gcols, how="inner")
-        else:
-            joined = prefixed.crossJoin(totals_hinted)
-
-        crossing = F.when(
-            F.col("__prefix") >= F.col("__noisy_threshold"), F.col(rank)
-        )
-        max_rank = F.max(rank)
-        if gcols:
-            picked = joined.groupBy(*gcols).agg(
-                F.coalesce(F.min(crossing), max_rank).alias(rank)
-            )
-        else:
-            picked = joined.agg(
-                F.coalesce(F.min(crossing), max_rank).alias(rank)
-            )
-        return picked

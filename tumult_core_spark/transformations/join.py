@@ -44,6 +44,7 @@ from ..utils.join import (
     join_output_domain,
     validate_join,
 )
+from ..utils.misc import column_ref
 from ..utils.truncation import drop_large_groups, truncate_large_groups
 
 
@@ -84,12 +85,13 @@ class PublicJoin(Transformation):
                 )
             for col, desc in public_df_domain.schema.items():
                 if isinstance(desc, SparkFloatColumnDescriptor):
+                    ref = column_ref(public_df, col)
                     if not desc.allow_inf:
                         public_df = public_df.filter(
-                            ~F.col(col).isin([float("inf"), -float("inf")])
+                            ~ref.isin([float("inf"), -float("inf")])
                         )
                     if not desc.allow_nan:
-                        public_df = public_df.filter(~F.isnan(F.col(col)))
+                        public_df = public_df.filter(~F.isnan(ref))
         if not isinstance(metric, (SymmetricDifference, IfGroupedBy)):
             raise ValueError(f"Unsupported metric {metric!r}")
         if isinstance(metric, IfGroupedBy) and metric.inner_metric not in (
@@ -148,7 +150,8 @@ class PublicJoin(Transformation):
     def stability_factor(self) -> ExactNumber:
         """Max join-key multiplicity of the public table (cached scan)."""
         if self._stability_factor is None:
-            keys = self.public_df.select(*self.join_cols)
+            refs = [column_ref(self.public_df, c) for c in self.join_cols]
+            keys = self.public_df.select(*refs)
             if not self.join_on_nulls:
                 # drop only NULL-keyed rows (they can never match under
                 # the null-unsafe join).  NOT dropna(): Spark's na.drop
@@ -157,11 +160,11 @@ class PublicJoin(Transformation):
                 # dropping them understated the stability factor (noise
                 # calibrated too small, a DP soundness hole).
                 cond = F.lit(False)
-                for c in self.join_cols:
-                    cond = cond | F.col(c).isNull()
+                for ref in refs:
+                    cond = cond | ref.isNull()
                 keys = keys.where(~cond)
             row = (
-                keys.groupBy(*self.join_cols)
+                keys.groupBy(*refs)
                 .agg(F.count(F.lit(1)).alias("__m"))
                 .agg(F.max("__m").alias("m"))
                 .first()

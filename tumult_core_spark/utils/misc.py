@@ -296,8 +296,8 @@ def sanitize_df(df: DataFrame, known_rows: int) -> DataFrame:
 
     ``known_rows`` is the release's a-priori row bound: a function of
     the public keys (grouped releases: at most one row per declared
-    key) or of the pre-noise data (SVT's group count, partition
-    selection's candidate count), never of a noise draw.  The bound
+    key; SVT: its public input grid) or of the pre-noise data
+    (partition selection's candidate count), never of a noise draw.  The bound
     alone picks the freeze branch, so nothing observed here depends on
     the noise and the single-invocation accounting is exact.  Each
     branch has exactly ONE release point, on any cluster:
